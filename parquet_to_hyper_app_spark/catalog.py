@@ -16,6 +16,14 @@ clean, oracle-comparable schema:
 At 100 TB each "table" becomes a directory of many parquet files (or an
 external catalog table); `load_table` takes any path spark.read.parquet
 accepts, so nothing here assumes single-file inputs.
+
+Schema resolution: an inferring ``spark.read.parquet`` runs a footer
+job before the query starts. `read_parquet` remembers the schema Spark
+inferred for a local path, with the path's `filesig` signature and the
+session confs that steer inference, and reads with that schema while
+neither changed — so a long-lived driver re-running queries over
+unchanged tables pays no inference job. Remote schemes and paths that
+cannot be stat'ed infer on every read, as a bare read does.
 """
 
 from __future__ import annotations
@@ -24,8 +32,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from parquet_to_hyper_app_spark.session import ensure_session_configs
+from parquet_to_hyper_app_spark.sources.filesig import local_path, remember, signature
 
 #: All driver-generated tables (TESTDATA.md / FIXTURES.md §A).
 TABLE_NAMES: tuple[str, ...] = (
@@ -46,10 +56,46 @@ TABLE_NAMES: tuple[str, ...] = (
 EVENTS_TS_EXPR = "CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)"
 
 
+#: session confs that change what parquet schema inference returns; a
+#: cached schema is reused only under the values it was inferred with
+_SCHEMA_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+#: absolute local path → (file signature, _SCHEMA_CONFS values, inferred
+#: schema); one entry per path, cleared when full (see `filesig`)
+_SCHEMA_CACHE: dict[str, tuple[tuple, tuple, StructType]] = {}
+_SCHEMA_CACHE_MAX = 1024
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, minus the schema-inference job
+    when ``path``'s data files and the inference confs are unchanged
+    since the schema was last inferred for it."""
+    local = local_path(path)
+    sig = signature(local) if local is not None else None
+    if sig is None:
+        return spark.read.parquet(path)
+    key = os.path.abspath(local)
+    confs = tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS)
+    hit = _SCHEMA_CACHE.get(key)
+    if hit is not None and hit[0] == sig and hit[1] == confs:
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    remember(_SCHEMA_CACHE, _SCHEMA_CACHE_MAX, key, (sig, confs, df.schema))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table with source normalization applied."""
     ensure_session_configs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr(EVENTS_TS_EXPR))
     return df

@@ -279,8 +279,7 @@ def convert_sink_events_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink round-trip must be value-preserving on a second schema (JSON
     strings, timestamps, doubles).
     """
-    _ = load_table(spark, sf_dir, "events")  # ensures session confs
     sink = os.path.join(tempfile.gettempdir(), "parquet_to_hyper_app_spark_sink", "events")
     df = normalize_schema(clean_numeric(load_table(spark, sf_dir, "events")))
     df.write.mode("overwrite").parquet(sink)
-    return spark.read.parquet(sink)
+    return spark.read.schema(df.schema).parquet(sink)  # explicit schema: no inference job

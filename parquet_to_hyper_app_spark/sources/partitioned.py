@@ -295,6 +295,8 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
         .option("partitionOverwriteMode", "dynamic")
         .parquet(path)
     )
-    return spark.read.parquet(path).select(
+    # explicit schema: no inference job, and the partition column keeps
+    # ev's string type instead of one inferred from directory names
+    return spark.read.schema(ev.schema).parquet(path).select(
         "event_id", "ts", "user_id", "value", "event_type"
     )

@@ -28,7 +28,8 @@ back onto one core, and a caller-supplied high-cardinality column so
 the exchange is deterministic hash partitioning (round-robin would pay
 the sort-before-repartition pass and is only used when no key column
 is available). Row-group counts are read from parquet footers on the
-driver (pyarrow, cached by (path, mtime, size)) — never a Spark job.
+driver (pyarrow, cached per path under its `filesig` signature) — never
+a Spark job.
 """
 
 from __future__ import annotations
@@ -38,14 +39,14 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: path → (mtime_ns, size, row-group count); parquet footers are
+from parquet_to_hyper_app_spark.sources.filesig import local_path, remember, signature
+
+#: path → (file signature, row-group count); parquet footers are
 #: immutable for a given file version, so an entry only goes stale
-#: when the file is rewritten in place — keying by path (ADVICE r15)
-#: replaces the stale version instead of accumulating one entry per
-#: (path, version) forever in long-lived drivers that rewrite
-#: sink/temp paths. _RG_CACHE_MAX bounds the pathological case of
-#: unboundedly many DISTINCT paths (uuid-named temp files).
-_RG_CACHE: dict[str, tuple[int, int, int]] = {}
+#: when the file is rewritten, which replaces it (see `filesig`).
+#: _RG_CACHE_MAX bounds the pathological case of unboundedly many
+#: DISTINCT paths (uuid-named temp files).
+_RG_CACHE: dict[str, tuple[tuple, int]] = {}
 _RG_CACHE_MAX = 8192
 
 #: don't even probe footers past this many files: at that point the
@@ -106,12 +107,8 @@ def _local_paths(df: DataFrame) -> list[str] | None:
         return None
     out: list[str] = []
     for uri in files:
-        p = uri
-        if p.startswith("file://"):
-            p = p[len("file://"):]
-        elif p.startswith("file:"):
-            p = p[len("file:"):]
-        elif "://" in p:
+        p = local_path(uri)
+        if p is None:
             return None
         out.append(p)
     return out
@@ -120,22 +117,19 @@ def _local_paths(df: DataFrame) -> list[str] | None:
 def _row_groups(path: str) -> int | None:
     """Row-group count from the parquet footer (cached); None if the
     footer can't be read (non-parquet input, concurrent rewrite)."""
-    try:
-        st = os.stat(path)
-    except OSError:
+    sig = signature(path)
+    if sig is None:
         return None
     hit = _RG_CACHE.get(path)
-    if hit is not None and hit[0] == st.st_mtime_ns and hit[1] == st.st_size:
-        return hit[2]
+    if hit is not None and hit[0] == sig:
+        return hit[1]
     try:
         import pyarrow.parquet as pq
 
         rg = pq.ParquetFile(path).metadata.num_row_groups
     except Exception:
         return None
-    if len(_RG_CACHE) >= _RG_CACHE_MAX:
-        _RG_CACHE.clear()  # blunt but bounded; refill is one footer read per path
-    _RG_CACHE[path] = (st.st_mtime_ns, st.st_size, rg)
+    remember(_RG_CACHE, _RG_CACHE_MAX, path, (sig, rg))
     return rg
 
 

@@ -59,6 +59,8 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     qname = f"fb_{uuid.uuid4().hex[:8]}"
     raw, ckpt = events_file_stream(spark, sf_dir, qname)
     out_dir = os.path.join(tempfile.gettempdir(), "p2h_spark_fb", qname, "out")
+    # the schema every epoch is written with (each batch has raw's schema)
+    sink_schema = clean_numeric(raw, exclude=("ts",)).schema
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # idempotence comes from keying the write by epoch: a replayed
@@ -84,9 +86,9 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the glob read would raise an unrelated PATH_NOT_FOUND; return
     # an empty frame with the sink schema instead
     if not glob.glob(os.path.join(out_dir, "epoch_*")):
-        empty = clean_numeric(spark.createDataFrame([], raw.schema), exclude=("ts",))
-        return empty.withColumn("ts", F.expr(_SINK_TS_EXPR))
-    out = spark.read.parquet(os.path.join(out_dir, "epoch_*"))
+        out = spark.createDataFrame([], sink_schema)
+    else:
+        out = spark.read.schema(sink_schema).parquet(os.path.join(out_dir, "epoch_*"))
     return out.withColumn("ts", F.expr(_SINK_TS_EXPR))
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_to_hyper_app_spark.session import ensure_session_configs
+from parquet_to_hyper_app_spark.sources.filesig import remember, signature
 
 #: state-store partition count for the LOCAL availableNow harness.
 #: Stateful operators create one state store per shuffle partition per
@@ -63,16 +64,20 @@ RAW_EVENTS_SCHEMA = (
     " event_type string, value double, props string"
 )
 
-#: cache of the detected (divisor, multiplier) to µs, keyed by the
-#: RESOLVED events.parquet path (stable across queries) — the per-query
-#: symlink dir embeds a uuid and would never hit
-_TS_SCALE_CACHE: dict[str, tuple[int, int]] = {}
+#: resolved events.parquet path → (file signature, detected (divisor,
+#: multiplier) to µs). Keyed by the RESOLVED path (stable across
+#: queries) — the per-query symlink dir embeds a uuid and would never
+#: hit; the signature re-probes a rewrite in place that may carry a
+#: different physical unit, replacing the path's entry (see `filesig`).
+_TS_SCALE_CACHE: dict[str, tuple[tuple, tuple[int, int]]] = {}
+_TS_SCALE_CACHE_MAX = 1024
 
 
 def _ts_micros_scale(
-    spark: SparkSession, src_dir: str, cache_key: str
+    spark: SparkSession, src_dir: str, target: str
 ) -> tuple[int, int]:
-    """Detect the int64 unit of ``ts`` as read through RAW_EVENTS_SCHEMA.
+    """Detect the int64 unit of ``ts`` as read through RAW_EVENTS_SCHEMA
+    from ``src_dir``, whose events file resolves to ``target``.
 
     Returns ``(div, mul)`` with exactly one ≠ 1 such that
     ``µs = ts div div * mul``. Detection: a batch aggregate through
@@ -83,35 +88,40 @@ def _ts_micros_scale(
     An arbitrary-first-row probe would misclassify a NULL-leading file
     as seconds and shift every timestamp 10^6×. Batch and stream cannot
     disagree because both are the V1 parquet source with an explicit
-    user schema.
+    user schema. A ``target`` that cannot be stat'ed is probed on every
+    call and never cached.
     """
-    if cache_key not in _TS_SCALE_CACHE:
-        row = (
-            spark.read.schema(RAW_EVENTS_SCHEMA)
-            .parquet(src_dir)
-            .where(F.col("ts").isNotNull())
-            .agg(F.max(F.abs(F.col("ts"))))
-            .first()
-        )
-        ts = row[0] if row is not None else None
-        if ts is None:
-            # empty source / all-NULL ts: there is nothing to convert,
-            # so the identity scale is correct — the stream runs and
-            # produces zero epochs, which the sinks explicitly handle
-            # (raising here would turn a handled empty result into a
-            # query error). Not cached: a first batch arriving later
-            # should get a real magnitude probe.
-            return (1, 1)
-        if ts > 3 * 10**16:
-            scale = (1_000, 1)  # nanoseconds
-        elif ts > 3 * 10**13:
-            scale = (1, 1)  # microseconds
-        elif ts > 3 * 10**10:
-            scale = (1, 1_000)  # milliseconds
-        else:
-            scale = (1, 1_000_000)  # seconds
-        _TS_SCALE_CACHE[cache_key] = scale
-    return _TS_SCALE_CACHE[cache_key]
+    sig = signature(target)
+    hit = _TS_SCALE_CACHE.get(target)
+    if sig is not None and hit is not None and hit[0] == sig:
+        return hit[1]
+    row = (
+        spark.read.schema(RAW_EVENTS_SCHEMA)
+        .parquet(src_dir)
+        .where(F.col("ts").isNotNull())
+        .agg(F.max(F.abs(F.col("ts"))))
+        .first()
+    )
+    ts = row[0] if row is not None else None
+    if ts is None:
+        # empty source / all-NULL ts: there is nothing to convert,
+        # so the identity scale is correct — the stream runs and
+        # produces zero epochs, which the sinks explicitly handle
+        # (raising here would turn a handled empty result into a
+        # query error). Not cached: a first batch arriving later
+        # should get a real magnitude probe.
+        return (1, 1)
+    if ts > 3 * 10**16:
+        scale = (1_000, 1)  # nanoseconds
+    elif ts > 3 * 10**13:
+        scale = (1, 1)  # microseconds
+    elif ts > 3 * 10**10:
+        scale = (1, 1_000)  # milliseconds
+    else:
+        scale = (1, 1_000_000)  # seconds
+    if sig is not None:
+        remember(_TS_SCALE_CACHE, _TS_SCALE_CACHE_MAX, target, (sig, scale))
+    return scale
 
 
 def events_file_stream(
@@ -170,16 +180,7 @@ def events_file_stream(
         .option("recursiveFileLookup", "true")
         .parquet(src_dir)
     )
-    # cache key carries mtime+size so an in-place rewrite of the same
-    # path with a different physical ts unit re-probes instead of
-    # applying the stale scale (review r5); missing target falls back
-    # to the bare path — the probe then sees the empty source
-    try:
-        st = os.stat(target)
-        sig = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        sig = "absent"
-    div, mul = _ts_micros_scale(spark, src_dir, f"{os.path.realpath(link)}:{sig}")
+    div, mul = _ts_micros_scale(spark, src_dir, os.path.realpath(link))
     if (div, mul) != (1, 1):
         stream = stream.withColumn("ts", F.expr(f"ts div {div} * {mul}"))
     return stream, ckpt

@@ -33,3 +33,20 @@ def spark():
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()
+
+
+def count_jobs(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs, counted through a
+    throwaway job group (the listener bus is drained first, so a job
+    whose start event is still queued is not missed)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -1,0 +1,96 @@
+"""Schema-resolved table loads: `catalog.read_parquet` reuses the
+schema Spark inferred for a path only while the path's data files and
+the inference confs are unchanged, and its cache stays bounded."""
+
+from __future__ import annotations
+
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from parquet_to_hyper_app_spark import catalog
+from parquet_to_hyper_app_spark.catalog import load_table, read_parquet
+from parquet_to_hyper_app_spark.sources.filesig import signature
+from tests.conftest import SF_SMOKE, count_jobs
+
+
+def test_unchanged_table_reloads_without_a_job(spark):
+    path = os.path.abspath(os.path.join(SF_SMOKE, "orders.parquet"))
+    catalog._SCHEMA_CACHE.pop(path, None)
+    first = count_jobs(spark, lambda: load_table(spark, SF_SMOKE, "orders"))
+    second = count_jobs(spark, lambda: load_table(spark, SF_SMOKE, "orders"))
+    assert first >= 1  # the cold load infers (and the counter sees it)
+    assert second == 0
+    assert load_table(spark, SF_SMOKE, "orders").count() == spark.read.parquet(path).count()
+
+
+def test_rewrite_in_place_is_reinferred(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a", "b"]
+    pq.write_table(pa.table({"x": [1.5], "y": [2], "z": ["q"]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["x", "y", "z"]
+    assert df.collect()[0].asDict() == {"x": 1.5, "y": 2, "z": "q"}
+
+
+def test_inference_conf_change_is_reinferred(spark, tmp_path):
+    """events.ts stored as TIMESTAMP(NANOS) infers as bigint only under
+    nanosAsLong; a schema cached under one value must not serve a read
+    under the other."""
+    path = str(tmp_path / "events.parquet")
+    ts = pa.array([1_600_000_000_000_000_123], pa.timestamp("ns"))
+    pq.write_table(pa.table({"event_id": [1], "ts": ts}), path, version="2.6")
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    assert dict(load_table(spark, str(tmp_path), "events").dtypes)["ts"] == "timestamp_ntz"
+    assert dict(read_parquet(spark, path).dtypes)["ts"] == "bigint"
+    spark.conf.set(conf, "false")
+    try:
+        # re-inferred: Spark either types the column as a timestamp or
+        # rejects the NANOS column; a stale cache would answer bigint
+        try:
+            ts_type = dict(read_parquet(spark, path).dtypes)["ts"]
+        except Exception as e:  # noqa: BLE001
+            assert "PARQUET_TYPE_ILLEGAL" in str(e), e
+        else:
+            assert ts_type.startswith("timestamp"), ts_type
+    finally:
+        spark.conf.set(conf, "true")
+    assert dict(read_parquet(spark, path).dtypes)["ts"] == "bigint"
+
+
+def test_missing_path_raises_as_before(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException) as bare:
+        spark.read.parquet(str(tmp_path / "gone.parquet"))
+    with pytest.raises(AnalysisException) as loaded:
+        load_table(spark, str(tmp_path), "gone")
+    assert loaded.value.getCondition() == bare.value.getCondition() == "PATH_NOT_FOUND"
+    assert os.path.abspath(str(tmp_path / "gone.parquet")) not in catalog._SCHEMA_CACHE
+
+
+def test_schema_cache_is_bounded(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(catalog, "_SCHEMA_CACHE_MAX", 3)
+    for i in range(7):
+        pq.write_table(pa.table({"c": [i]}), str(tmp_path / f"t{i}.parquet"))
+        load_table(spark, str(tmp_path), f"t{i}")
+        load_table(spark, str(tmp_path), f"t{i}")  # a hit adds no entry
+        assert len(catalog._SCHEMA_CACHE) <= 3
+        assert os.path.abspath(str(tmp_path / f"t{i}.parquet")) in catalog._SCHEMA_CACHE
+
+
+def test_directory_signature_tracks_data_files_only(tmp_path):
+    d = tmp_path / "tbl"
+    (d / "k=1").mkdir(parents=True)
+    pq.write_table(pa.table({"c": [1]}), str(d / "k=1" / "part-0.parquet"))
+    base = signature(str(d))
+    assert len(base) == 1
+    (d / "_SUCCESS").write_text("")
+    (d / ".part-0.parquet.crc").write_text("x")
+    assert signature(str(d)) == base
+    pq.write_table(pa.table({"c": [2, 3]}), str(d / "k=1" / "part-1.parquet"))
+    assert len(signature(str(d))) == 2
+    assert signature(str(tmp_path / "absent")) is None

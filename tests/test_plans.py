@@ -16,7 +16,7 @@ from parquet_to_hyper_app_spark.plans.inspect import (
     read_schema_columns,
 )
 from parquet_to_hyper_app_spark.registry import load_all
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, count_jobs
 
 #: queries allowed a broadcast-nested-loop join: the broadcast side is
 #: a deliberately tiny query/probe set, which is the intended pattern.
@@ -92,6 +92,22 @@ def test_shuffle_budgets(executed_stats):
     # narrow projections must not shuffle at all
     for key in ("clean_numeric", "normalize_schema", "scalar_math"):
         assert executed_stats[key].shuffles == 0, key
+
+
+#: keys whose build (``QuerySpec.fn``) only plans: once the tables they
+#: read have had their schemas resolved, building them runs no Spark job
+JOB_FREE_BUILDS = ("sort_limit", "normalize_schema", "join_inner", "tpch_q3")
+
+
+def test_warm_builds_run_no_jobs(spark):
+    """Jobs-per-key budget for the build step: after one warm call, a
+    repeated build of a plan-only key pays no schema-inference (or any
+    other) job before its result is requested."""
+    specs = load_all()
+    for key in JOB_FREE_BUILDS:
+        fn = specs[key].fn
+        fn(spark, SF_SMOKE)
+        assert count_jobs(spark, lambda: fn(spark, SF_SMOKE)) == 0, key
 
 
 def test_whole_stage_codegen_everywhere(executed_stats):

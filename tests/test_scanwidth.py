@@ -166,4 +166,4 @@ def test_row_group_cache_replaces_stale_path_entries(spark, tmp_path):
         time.sleep(0.01)
         assert scanwidth._row_groups(path) == want_rg
     assert path in scanwidth._RG_CACHE
-    assert scanwidth._RG_CACHE[path][2] == 2
+    assert scanwidth._RG_CACHE[path][-1] == 2
