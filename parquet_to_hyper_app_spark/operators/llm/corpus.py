@@ -786,78 +786,55 @@ def containment_frame(
     spark: SparkSession, sf_dir: str, df_cap: int | str | None = None,
     auto_cap_min_s2: float | None = None, materialize: bool = True,
 ) -> DataFrame:
-    """The containment engine behind `dedup_containment`, with the
-    VERIFY strategy selectable by ``df_cap`` (the semdedup_frame(k)
-    device: the registered key is the oracle-replayable default, the
-    parameter is the measured deployment branch).
+    """The containment engine behind `dedup_containment`: every ordered
+    same-language pair (src, dst) of non-blank docs with
+    C = |src ∩ dst| / |src| ≥ `_CONTAIN_T` over distinct word-bigram
+    hashes, as (doc_src, doc_dst, containment).
 
-    ``df_cap=None`` (the registered contract) verifies every candidate
-    through the pure gram-level co-occurrence count join. An explicit
-    ``df_cap`` is the POWER-LAW deployment form: the count join runs
-    only over grams with df ≤ cap (bounding its pre-combine stream at
-    Σ_{{df≤cap}} df² ≤ cap·Σdf rows), while each doc's FEW high-df
-    grams — at most the vocabulary head above the cap — ride as a
-    small sorted array joined per candidate side and intersected
-    exactly. common = count_low + |high_src ∩ high_dst| partitions
-    each doc's gram set by df, so the two variants are pair-for-pair
-    identical (asserted in tests and by tools/powerlaw_probe.py).
-    ``df_cap="auto"`` picks between them from the corpus's own df
-    distribution (`_auto_df_cap`'s measured Σdf²/Σdf rule);
-    ``auto_cap_min_s2`` (ADVICE r12) lowers/raises that rule's
-    absolute Σdf² magnitude floor for deployments whose executors
-    are smaller (or larger) than the 1e8-row calibration assumed
-    (None, the default, keeps ``_AUTO_CAP_MIN_S2``) — it affects
-    the "auto" decision only, never an explicit cap.
+    ``df_cap=None`` (the registered form) is a threshold over the
+    unordered co-occurrence counts (`unordered_cooccurrence`): the
+    count holds |A ∩ B| for EVERY same-language pair that shares a
+    gram, and a pair sharing none has C = 0, so each counted pair
+    (pl, pg) yields both orientations, common / n_pl and common / n_pg,
+    and the threshold keeps exactly the oracle's rows. No candidate
+    phase: a prefix filter could only drop pairs the threshold drops
+    anyway, after the Σdf²-row count stream it would be joined to has
+    already been computed in full. The cost is that stream — benign on
+    bounded-df vocabularies (sf0.1: Σdf² = 19.0M, max df 152), explosive
+    on a power-law corpus where stopword bigrams have df in the
+    millions.
 
-    Candidate scheme (prefix filter, containment form): rank each
-    doc's bigrams by (document frequency asc, hash) within its lang —
-    the same global order the Jaccard miner uses. C ≥ t forces
-    |∩| ≥ ⌈t·n_src⌉, so by pigeonhole the smallest common bigram sits
-    within the source's first n_src − ⌈t·n_src⌉ + 1 ranked bigrams
-    (at t = 0.8, ~20% of the doc). Candidates therefore come from an
-    equi-join of SOURCE PREFIXES against the FULL (lang, bigram)
-    index of targets — containment puts no size bound on the target,
-    so the target side cannot be prefix-pruned, and that full index
-    is exactly one explode of corpus gram volume. The exhaustive
-    within-lang oracle proves the prefix filter lossless.
+    An explicit int ``df_cap`` is the POWER-LAW deployment form: the
+    count join runs only over grams with df ≤ cap (bounding its
+    pre-combine stream at Σ_{df≤cap} df² ≤ cap·Σdf rows), while each
+    doc's FEW high-df grams — at most the vocabulary head above the
+    cap — ride as a small sorted array joined per candidate side and
+    intersected exactly; common = count_low + |high_src ∩ high_dst|
+    partitions each doc's gram set by df. Its low-df count misses the
+    pairs whose shared grams all sit above the cap, so this form (and
+    only this form) generates candidates with the All-Pairs prefix
+    filter, containment variant: rank each doc's bigrams by (df asc,
+    hash) within its lang; C ≥ t forces |∩| ≥ ⌈t·n_src⌉, so by
+    pigeonhole the rarest common bigram sits within the source's first
+    n_src − ⌈t·n_src⌉ + 1 ranked bigrams, and an equi-join of source
+    prefixes against the FULL (lang, bigram) index of targets
+    (containment bounds no target size, so the target side cannot be
+    pruned) finds every qualifying pair. Both forms return identical
+    rows (tests/test_llm.py, tools/powerlaw_probe.py).
 
-    Verify (r9, byte-side redesign): |src ∩ dst| comes from a
-    gram-level co-occurrence COUNT — explode both sides to
-    (doc, lang, gram-hash) rows, equi-join on (lang, hash), map-side
-    partial-count per ordered (src, dst) — joined to the candidate
-    pairs and divided by n_src (integer-exact cross-engine). The r8
-    array-carrying verify (re-joining both full int64 hash arrays,
-    ~KB/row, onto every candidate pair before array_intersect) was
-    the repo's one MEASURED super-linear scale wall: candidate COUNTS
-    stay exactly linear at x64, but the verify bytes — a
-    multi-hundred-GB shuffle at 105M pairs — saturate a single JVM
-    between x32 and x64 even at parts=256 (docs/SCALE.md, "Round-8
-    x64 stress: chasing the containment wall"). The count join moves
-    24-byte rows instead.
+    ``df_cap="auto"`` picks the form from the corpus's own df
+    distribution (`_auto_df_cap`'s measured Σdf²/Σdf rule, SCALE.md
+    "Round-10"); ``auto_cap_min_s2`` moves that rule's absolute Σdf²
+    floor for executors smaller or larger than its 1e8-row calibration
+    and is valid only with "auto".
 
-    At 100 TB: candidate volume is Σ_src prefix_len · df(gram) —
-    dominated by rare grams exactly like the Jaccard path — and the
-    co-occurrence stream is Σ_g df(g)² rows BEFORE the map-side
-    combine. That square is benign on bounded-df vocabularies
-    (measured at sf0.1: Σdf² = 19.0M, max df 152 — ~8× the candidate
-    rows at ~40× fewer bytes each) but explodes on a power-law real
-    corpus where stopword bigrams have df in the millions; there the
-    deployment-grade form is the ``df_cap`` hybrid above — built and
-    MEASURED in r10 on a Zipfian synthetic (tools/powerlaw_probe.py;
-    crossover numbers in docs/SCALE.md "Round-10"), kept OFF the
-    registered key because the driver testdata is bounded-df (r8
-    measured the distribution first, which is the right order).
-    Shuffle keys (df counts, prefix rank, candidate join, co-occur
-    count) all scale with corpus gram volume; the pair-row COUNTS are
-    linear, and after r9 the verify BYTES are too."""
-    from pyspark.sql import Window
-
-    # same up-front hygiene as df_cap/k (ADVICE r12 made the floor
-    # tunable): a floor passed alongside a non-"auto" df_cap would be
-    # silently dead — the caller believes a lowered floor is in effect
-    # while the decision it tunes never runs — and bool (an int
-    # subclass that would gate at Σdf² > 1.0), negatives, and NaN are
-    # config typos, not regimes (r13 review closed the asymmetry)
+    materialize=False returns the lazy plan (no persist, no eager
+    checkpoint) for inspection; executing callers keep the default,
+    which checkpoints the small pair set so the corpus-wide gram cache
+    is released before returning."""
+    # a floor passed alongside a non-"auto" df_cap would be silently
+    # dead, and bool (an int subclass that would gate at Σdf² > 1.0),
+    # negatives and NaN are config typos, not regimes
     if auto_cap_min_s2 is not None:
         if df_cap != "auto":
             raise ValueError(
@@ -875,163 +852,65 @@ def containment_frame(
                 f" got {auto_cap_min_s2!r}"
             )
     docs = load_table(spark, sf_dir, "documents")
-    # the canonical tokenize→bigram→distinct→hash frame (dedup.py) —
-    # one definition shared with ngram_jaccard_pairs, so the hard-won
-    # shapes (rlike(\S) before the bigram projection, get() for ANSI
-    # safety, ['']→[] normalization) can never drift between the
-    # Jaccard and containment miners. Returned persisted (read 3x
-    # here: df ranking, source prefixes, verify arrays).
-    # materialize=False: full LAZY plan for inspection/tests (the
-    # verified_near_dup_pairs device) — no persist, no eager checkpoint
+    # the canonical tokenize→bigram→distinct→hash frame, shared with
+    # ngram_jaccard_pairs. Persisted even where it is read once: without
+    # the cache boundary Catalyst pushes the explode's inferred
+    # size(hashes) > 0 filter below bigram_hash_frame's widening
+    # repartition, back into the one-task scan stage (the whole miner
+    # measured ~2.0 s without the persist vs ~1.0 s with it, sf0.01 on
+    # 4 cores)
     grams = bigram_hash_frame(docs, persist=materialize)
     cached_df_tab = None
     try:
         occ = grams.select("doc_id", "lang", "n", F.explode("hashes").alias("h"))
-        df_tab = occ.groupBy("lang", "h").agg(F.count(F.lit(1)).alias("df"))
-        if isinstance(df_cap, str):
-            if df_cap != "auto":
-                raise ValueError(f"df_cap must be an int, None, or 'auto', got {df_cap!r}")
-            # the stats agg is a separate ACTION, so without a persist the
-            # main query would recompute the df_tab shuffle from scratch
-            # (measured ~2.5-3s of ~10s at the d20000 Zipf point); caching
-            # it lets the decision agg and the ranking/verify joins share
-            # one computation. The registered (None) path never pays the
-            # cache — its plan is untouched.
-            cached_df_tab = df_tab = df_tab.persist()
-            df_cap = _auto_df_cap(df_tab, auto_cap_min_s2)
-        elif df_cap is not None:
-            # bool is an int subclass: df_cap=True would silently run as
-            # cap=1; df_cap < 1 would route EVERY gram to the per-doc
-            # 'high' arrays — the exact r8 array-carrying byte wall the
-            # hybrid replaces — while still returning correct rows, an
-            # invisible regression until a shuffle saturates (ADVICE r10)
-            if isinstance(df_cap, bool) or not isinstance(df_cap, int):
-                raise ValueError(f"df_cap must be an int, None, or 'auto', got {df_cap!r}")
-            if df_cap < 1:
-                raise ValueError(f"df_cap must be >= 1, got {df_cap}")
-            # the explicit-int hybrid reads df_tab twice (the `ranked`
-            # join and the `occ_df` verify join) — without the persist the
-            # df groupBy shuffle recomputes once per consumer, the same
-            # measured ~2.5-3s the auto path's cache already saves
-            # (VERDICT r10 item 4); same unpersist lifecycle below
-            cached_df_tab = df_tab = df_tab.persist()
-        if cached_df_tab is None and df_cap is None:
-            # registered (uncapped) path: df as a COUNT WINDOW over
-            # (lang, h) — identical values to the groupBy + join-back,
-            # one (lang, h) exchange instead of agg-exchange + re-join
-            # (guide §2.4; same rewrite as ngram_jaccard_pairs). The
-            # capped/auto paths keep df_tab: they read it again for the
-            # verify split / the decision agg, where the persisted
-            # table pays for itself.
-            ranked = occ.withColumn(
-                "df", F.count(F.lit(1)).over(Window.partitionBy("lang", "h"))
-            )
-        else:
-            ranked = occ.join(df_tab, ["lang", "h"])
-        ranked = ranked.withColumn(
-            "pos", F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "h")) - 1
-        )
-        prefix_len = (
-            F.col("n") - F.ceil(F.col("n") * F.lit(_CONTAIN_T)) + 1
-        ).cast("int")
-        src_pref = ranked.filter(F.col("pos") < prefix_len).select(
-            F.col("doc_id").alias("src"), "lang", F.col("h").alias("ph"), F.col("n").alias("ns")
-        )
-        dst_index = occ.select(
-            F.col("doc_id").alias("dst"), "lang", F.col("h").alias("ph"), F.col("n").alias("nd")
-        )
-        cands = (
-            src_pref.join(dst_index, ["lang", "ph"])
-            # size prune, lossless: C ≥ t ⟹ n_dst ≥ |∩| ≥ ⌈t·n_src⌉ — a
-            # target with fewer distinct grams than 80% of the source can
-            # never contain it, so the pair dies inside the join before
-            # the distinct/verify stages materialize it
-            .filter((F.col("src") != F.col("dst")) & (F.col("nd") >= F.ceil(F.col("ns") * F.lit(_CONTAIN_T))))
-            .select("src", "dst", "ns")
-        )
-        # pair dedup at a PINNED, INPUT-SCALED partition width, not
-        # .distinct(): the candidate rows are tiny in bytes and AQE's
-        # size-based coalescing — blind to the downstream verify join —
-        # would squeeze it onto a handful of cores (the trap
-        # ngram_jaccard_pairs measured, review r6); the width itself
-        # scales with gram volume (miner_partitions, r9) because the
-        # session conf is sized for the bench SF and was measured
-        # spilling one doubling past it. ns rides along (functionally
-        # dependent on src) so the verify needs no extra n_src join. The
-        # dedup partitions on the UNORDERED key (least, greatest) that the
-        # verify join below probes on, and dedups on (pl, pg, src) — a
-        # bijection of (src, dst) given src ≠ dst — rather than (src, dst)
-        # itself: Catalyst can't prove pl/pg are functions of src/dst, so
-        # a (src, dst) dedup over (pl, pg) partitioning would insert a
-        # second exchange at conf width and lose the pinned width; the
-        # prefix-keyed dedup reuses the one exchange as-is.
         n_parts = miner_partitions(grams)
-        pl, pg = F.least("src", "dst").alias("pl"), F.greatest("src", "dst").alias("pg")
-        cands = (
-            cands.select("src", "dst", "ns", pl, pg)
-            .repartition(n_parts, "pl", "pg")
-            .dropDuplicates(["pl", "pg", "src"])
-        )
+        if df_cap is not None:
+            df_tab = occ.groupBy("lang", "h").agg(F.count(F.lit(1)).alias("df"))
+            if isinstance(df_cap, str):
+                if df_cap != "auto":
+                    raise ValueError(
+                        f"df_cap must be an int, None, or 'auto', got {df_cap!r}"
+                    )
+                # the decision agg is a separate ACTION; the persist lets
+                # it and the capped form's ranking/verify joins share one
+                # df computation (measured ~2.5-3 s of ~10 s at the d20000
+                # Zipf point without it)
+                cached_df_tab = df_tab = df_tab.persist()
+                df_cap = _auto_df_cap(df_tab, auto_cap_min_s2)
+            else:
+                # bool is an int subclass: df_cap=True would silently run
+                # as cap=1; df_cap < 1 would route EVERY gram to the per-doc
+                # arrays — the array-carrying byte wall the hybrid exists to
+                # avoid — while still returning correct rows
+                if isinstance(df_cap, bool) or not isinstance(df_cap, int):
+                    raise ValueError(
+                        f"df_cap must be an int, None, or 'auto', got {df_cap!r}"
+                    )
+                if df_cap < 1:
+                    raise ValueError(f"df_cap must be >= 1, got {df_cap}")
+                # read twice below (ranking and verify split)
+                cached_df_tab = df_tab = df_tab.persist()
         if df_cap is None:
-            # gram-level co-occurrence count verify (unordered_cooccurrence,
-            # shared with ngram_jaccard_pairs): |src ∩ dst| in 24-byte rows,
-            # replacing the r8 array-carrying verify (the measured x64 byte
-            # wall; see docstring). Candidates inner-join losslessly: every
-            # candidate shares ≥1 gram by construction, so its pair appears;
-            # both orientations of an ordered candidate probe the same
-            # unordered count.
             cooc = unordered_cooccurrence(occ, n_parts)
-            verified = cands.join(cooc, ["pl", "pg"]).withColumn(
-                "containment", F.col("common").cast("double") / F.col("ns")
+            common = F.col("common").cast("double")
+            verified = cooc.select(
+                F.inline(
+                    F.array(
+                        F.struct(
+                            F.col("pl").alias("src"),
+                            F.col("pg").alias("dst"),
+                            (common / F.col("n_pl")).alias("containment"),
+                        ),
+                        F.struct(
+                            F.col("pg").alias("src"),
+                            F.col("pl").alias("dst"),
+                            (common / F.col("n_pg")).alias("containment"),
+                        ),
+                    )
+                )
             )
         else:
-            # df-capped hybrid verify (see docstring): the count join sees
-            # only grams with df ≤ cap, so its pre-combine stream is
-            # bounded by cap·Σdf rows instead of Σdf²; the high-df
-            # remainder — per doc at most the vocabulary head above the
-            # cap — travels as ONE small sorted array per candidate side
-            # and is intersected exactly. The cooc join must be LEFT here:
-            # a candidate pair introduced by a low-df prefix gram can
-            # still share zero grams below the cap only when the prefix
-            # gram itself is above it, and a pair whose every shared gram
-            # is high-df must survive to the array term.
-            occ_df = occ.join(df_tab, ["lang", "h"])
-            cooc_low = unordered_cooccurrence(
-                occ_df.filter(F.col("df") <= df_cap).select("doc_id", "lang", "h"),
-                n_parts,
-            )
-            high = (
-                occ_df.filter(F.col("df") > df_cap)
-                .groupBy("doc_id")
-                .agg(F.sort_array(F.collect_list("h")).alias("hi"))
-            )
-            no_high = F.array().cast("array<bigint>")
-            verified = (
-                cands.join(cooc_low, ["pl", "pg"], "left")
-                .join(
-                    high.select(F.col("doc_id").alias("src"), F.col("hi").alias("hi_s")),
-                    "src",
-                    "left",
-                )
-                .join(
-                    high.select(F.col("doc_id").alias("dst"), F.col("hi").alias("hi_d")),
-                    "dst",
-                    "left",
-                )
-                .withColumn(
-                    "common",
-                    F.coalesce(F.col("common"), F.lit(0))
-                    + F.size(
-                        F.array_intersect(
-                            F.coalesce(F.col("hi_s"), no_high),
-                            F.coalesce(F.col("hi_d"), no_high),
-                        )
-                    ),
-                )
-                .withColumn(
-                    "containment", F.col("common").cast("double") / F.col("ns")
-                )
-            )
+            verified = _capped_containment(occ, df_tab, df_cap, n_parts)
         out = verified.filter(F.col("containment") >= _CONTAIN_T).select(
             F.col("src").alias("doc_src"),
             F.col("dst").alias("doc_dst"),
@@ -1039,20 +918,84 @@ def containment_frame(
         )
         if not materialize:
             return out
-        # materialize the (small) pair set eagerly so the corpus-wide
-        # hash-array cache releases NOW instead of pinning executor
-        # storage for the session lifetime (same lifecycle as
-        # ngram_jaccard_pairs — review r6)
-        out = out.localCheckpoint(eager=True)
-        return out
+        return out.localCheckpoint(eager=True)
     finally:
-        # release the corpus-wide caches on BOTH paths: the eager
-        # checkpoint above means success no longer needs them, and a
-        # failed decision agg / analysis error / main query must not
-        # pin executor storage for the session lifetime (ADVICE r10)
+        # release the corpus-wide caches on every path: the eager
+        # checkpoint means success no longer needs them, and a failed
+        # decision agg / analysis error / main query must not pin
+        # executor storage for the session lifetime
         grams.unpersist()
         if cached_df_tab is not None:
             cached_df_tab.unpersist()
+
+
+def _capped_containment(
+    occ: DataFrame, df_tab: DataFrame, df_cap: int, n_parts: int
+) -> DataFrame:
+    """(src, dst, containment) for the prefix-filter candidates of the
+    df-capped hybrid (see `containment_frame`), before the threshold."""
+    from pyspark.sql import Window
+
+    ranked = occ.join(df_tab, ["lang", "h"]).withColumn(
+        "pos", F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "h")) - 1
+    )
+    prefix_len = (F.col("n") - F.ceil(F.col("n") * F.lit(_CONTAIN_T)) + 1).cast("int")
+    src_pref = ranked.filter(F.col("pos") < prefix_len).select(
+        F.col("doc_id").alias("src"), "lang", F.col("h").alias("ph"), F.col("n").alias("ns")
+    )
+    dst_index = occ.select(
+        F.col("doc_id").alias("dst"), "lang", F.col("h").alias("ph"), F.col("n").alias("nd")
+    )
+    cands = (
+        src_pref.join(dst_index, ["lang", "ph"])
+        # size prune, lossless: C ≥ t ⟹ n_dst ≥ |∩| ≥ ⌈t·n_src⌉
+        .filter(
+            (F.col("src") != F.col("dst"))
+            & (F.col("nd") >= F.ceil(F.col("ns") * F.lit(_CONTAIN_T)))
+        )
+        .select("src", "dst", "ns")
+    )
+    # pair dedup at a PINNED, input-scaled width, not .distinct(): the
+    # candidate rows are tiny in bytes and AQE's size-based coalescing —
+    # blind to the verify join downstream — would squeeze them onto a
+    # handful of cores. The dedup partitions on the unordered key the
+    # verify probes on and dedups on (pl, pg, src), a bijection of
+    # (src, dst) given src ≠ dst, so it reuses that one exchange (a
+    # (src, dst) dedup would add a second one at conf width).
+    pl, pg = F.least("src", "dst").alias("pl"), F.greatest("src", "dst").alias("pg")
+    cands = (
+        cands.select("src", "dst", "ns", pl, pg)
+        .repartition(n_parts, "pl", "pg")
+        .dropDuplicates(["pl", "pg", "src"])
+    )
+    # the count join sees only grams with df ≤ cap; the high-df
+    # remainder travels as ONE small sorted array per candidate side
+    # and is intersected exactly. The cooc join is LEFT: a pair whose
+    # every shared gram is high-df has no low count and must survive to
+    # the array term.
+    occ_df = occ.join(df_tab, ["lang", "h"])
+    cooc_low = unordered_cooccurrence(occ_df.filter(F.col("df") <= df_cap), n_parts)
+    high = (
+        occ_df.filter(F.col("df") > df_cap)
+        .groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list("h")).alias("hi"))
+    )
+    no_high = F.array().cast("array<bigint>")
+    return (
+        cands.join(cooc_low.select("pl", "pg", "common"), ["pl", "pg"], "left")
+        .join(high.select(F.col("doc_id").alias("src"), F.col("hi").alias("hi_s")), "src", "left")
+        .join(high.select(F.col("doc_id").alias("dst"), F.col("hi").alias("hi_d")), "dst", "left")
+        .withColumn(
+            "common",
+            F.coalesce(F.col("common"), F.lit(0))
+            + F.size(
+                F.array_intersect(
+                    F.coalesce(F.col("hi_s"), no_high), F.coalesce(F.col("hi_d"), no_high)
+                )
+            ),
+        )
+        .select("src", "dst", (F.col("common").cast("double") / F.col("ns")).alias("containment"))
+    )
 
 
 @query(
@@ -1075,15 +1018,13 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     articles, expanded revisions) scores low on Jaccard (the union is
     dominated by the big doc) but high on containment
     C(src→dst) = |src ∩ dst| / |src|. Emits every ORDERED pair with
-    C ≥ 0.8 over distinct word bigrams, within language; the
-    exhaustive within-lang oracle proves the prefix filter lossless.
+    C ≥ 0.8 over distinct word bigrams, within language.
 
-    The engine is `containment_frame` (prefix-filter candidates +
-    co-occurrence count verify — see its docstring for the full
-    candidate/verify scheme and the 100 TB posture). The registered
-    shape is the uncapped ``df_cap=None`` form, correct for the
-    bounded-df testdata vocabulary; `containment_frame(df_cap=...)`
-    is the measured power-law deployment branch."""
+    The registered form is `containment_frame`'s ``df_cap=None``: a
+    threshold over the unordered co-occurrence counts, both
+    orientations per counted pair, equal row for row to the exhaustive
+    within-lang oracle. The prefix filter serves only the df-capped
+    power-law form (`containment_frame(df_cap=...)`)."""
     return containment_frame(spark, sf_dir)
 
 
@@ -1755,18 +1696,17 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the corpus.
     """
     import os
-    import shutil
-    import tempfile
     import uuid
 
     from parquet_to_hyper_app_spark.streaming.source import (
         ensure_session_configs,
         run_to_memory,
+        stream_dir,
     )
 
     ensure_session_configs(spark)
     qname = f"qg_{uuid.uuid4().hex[:8]}"
-    base = os.path.join(tempfile.gettempdir(), "p2h_spark_stream", qname)
+    base = stream_dir(qname)
     src_dir = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(src_dir, exist_ok=True)
@@ -1796,11 +1736,6 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = run_to_memory(agg, qname, ckpt, "complete")
-    # one-shot availableNow query: the checkpoint + symlink dir has no
-    # further use (run_to_memory localCheckpoints the result), and the
-    # uuid naming means nothing ever reuses it — remove it so repeated
-    # sweeps/probes don't accumulate temp litter (review r6)
-    shutil.rmtree(base, ignore_errors=True)
     return out.select(
         "source",
         "n_docs",
@@ -1919,18 +1854,17 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     because availableNow runs one bounded batch.
     """
     import os
-    import shutil
-    import tempfile
     import uuid
 
     from parquet_to_hyper_app_spark.streaming.source import (
         ensure_session_configs,
         run_to_memory,
+        stream_dir,
     )
 
     ensure_session_configs(spark)
     qname = f"sid_{uuid.uuid4().hex[:8]}"
-    base_dir = os.path.join(tempfile.gettempdir(), "p2h_spark_stream", qname)
+    base_dir = stream_dir(qname)
     src_dir = os.path.join(base_dir, "src")
     ckpt = os.path.join(base_dir, "ckpt")
     os.makedirs(src_dir, exist_ok=True)
@@ -1968,9 +1902,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "content_hash",
         )
     )
-    out = run_to_memory(survivors, qname, ckpt, "complete")
-    shutil.rmtree(base_dir, ignore_errors=True)
-    return out
+    return run_to_memory(survivors, qname, ckpt, "complete")
 
 
 #: exact-quota stratified sample size (per language). Rate-based

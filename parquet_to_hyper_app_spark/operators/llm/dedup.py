@@ -598,46 +598,43 @@ def miner_partitions(docs: DataFrame) -> int:
 
 
 def unordered_cooccurrence(occ: DataFrame, n_parts: int) -> DataFrame:
-    """|A ∩ B| for every unordered doc pair sharing ≥1 distinct gram:
-    count(*) over the (lang, hash) equi-join of the exploded
-    distinct-gram index with itself, keyed (pl, pg) = (smaller id,
-    larger id). The verify core of the r9 byte-side redesign, used by
-    `corpus.dedup_containment`: 24-byte rows with a map-side partial
-    count instead of re-joining both full int64 hash arrays (~KB/row)
-    onto every candidate pair — the r8 x64 stress measured that array
-    shuffle as the repo's one super-linear scale wall (docs/SCALE.md
-    "chasing the containment wall"). Overlap is symmetric, so counting
-    unordered pairs halves both the join output and the aggregation
-    keys. It lives here next to the gram frame it consumes; the
-    Jaccard miner measured BETTER on its array verify (tiny candidate
-    set — see dedup_ngram_jaccard) and deliberately does not use it.
+    """|A ∩ B| for every unordered doc pair sharing ≥1 distinct gram,
+    with each side's distinct-gram count: count(*) over the (lang,
+    hash) equi-join of the exploded (doc_id, lang, h, n) index with
+    itself, keyed (pl, pg) = (smaller id, larger id) and carrying
+    n_pl / n_pg, so a caller derives either orientation's containment
+    common / n_src without joining the sizes back. n is functionally
+    dependent on the doc id, so grouping on it changes no group.
+    Narrow fixed-width rows with a map-side partial count instead of
+    re-joining both full int64 hash arrays (~KB/row) onto every pair —
+    the array form is the one super-linear scale wall measured in this
+    repo (docs/SCALE.md "chasing the containment wall"). Overlap is
+    symmetric, so counting unordered pairs halves both the join output
+    and the aggregation keys. The Jaccard miner's candidate set is
+    small enough that its per-pair array verify measured better (see
+    dedup_ngram_jaccard), so it does not use this.
 
-    BOTH join inputs are repartitioned to the miner width on the join
-    key: the cached grams frame carries the parquet scan's
-    partitioning (ONE partition at bench SF), and without the explicit
-    exchange Spark broadcast-joins the small side and runs the whole
-    Σdf²-row stream + partial count on that one core — measured 13.6s
-    vs 1.7s at sf0.1 (r9 A/B). Co-partitioning both sides at the same
-    width is the exchange an SMJ would need anyway; this just pins its
-    width to the input scale.
+    The index is repartitioned ONCE to the miner width on the join key
+    and both join sides read that one exchange: the cached grams frame
+    carries the parquet scan's partitioning (ONE partition at bench
+    SF), and without the explicit exchange Spark broadcast-joins one
+    side and runs the whole Σdf²-row stream + partial count on one
+    core (measured 13.6 s vs 1.7 s at sf0.1).
 
     Cost is Σ_g df(g)² rows before the combine — benign on bounded-df
     vocabularies (sf0.1: Σdf² = 19.0M, max df 152), explosive on
     power-law corpora where stopword grams have df in the millions;
-    there the deployment form is a df-capped hybrid (count-join for
-    df ≤ cap, array verify for the rare high-df remainder),
-    deliberately not built for this corpus."""
+    there the caller restricts ``occ`` to grams under a df cap
+    (`corpus.containment_frame(df_cap=...)`)."""
+    idx = occ.select("doc_id", "lang", "h", "n").repartition(n_parts, "lang", "h")
     return (
-        occ.select(F.col("doc_id").alias("pl"), "lang", "h")
-        .repartition(n_parts, "lang", "h")
+        idx.select(F.col("doc_id").alias("pl"), "lang", "h", F.col("n").alias("n_pl"))
         .join(
-            occ.select(F.col("doc_id").alias("pg"), "lang", "h").repartition(
-                n_parts, "lang", "h"
-            ),
+            idx.select(F.col("doc_id").alias("pg"), "lang", "h", F.col("n").alias("n_pg")),
             ["lang", "h"],
         )
         .filter(F.col("pl") < F.col("pg"))
-        .groupBy("pl", "pg")
+        .groupBy("pl", "pg", "n_pl", "n_pg")
         .agg(F.count(F.lit(1)).alias("common"))
     )
 

@@ -16,12 +16,15 @@ ordered double fold) — no UDF, bitwise-matching the DuckDB oracle.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from parquet_to_hyper_app_spark.catalog import load_table
 from parquet_to_hyper_app_spark.functions.crosshash import HASH60_DUCK, rademacher_entry
 from parquet_to_hyper_app_spark.registry import query
+from parquet_to_hyper_app_spark.sources.filesig import local_path, remember, signature
 from parquet_to_hyper_app_spark.sources.scanwidth import scan_spread
 
 _N_QUERIES = 10
@@ -192,25 +195,43 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
-#: sf_dir → dim / row count; the lookups are one tiny job each but
-#: every LSH/IVF query would otherwise re-run them per invocation.
-#: _DIM_CACHE stores None too — the degenerate no-well-defined-vector
-#: answer costs the same max-agg scan as a real dim, so leaving it
-#: uncached re-ran that scan per invocation (ADVICE r8).
-_DIM_CACHE: dict[str, int | None] = {}
-_COUNT_CACHE: dict[str, int] = {}
+#: resolved embeddings path → (file signature, dim / row count); the
+#: lookups are one tiny job each but every LSH/IVF query would
+#: otherwise re-run them per invocation. A rewrite of the table in
+#: place replaces the path's entry (see `filesig`), so a new
+#: dimensionality is never filtered against a stale one. _DIM_CACHE
+#: stores None too — the degenerate no-well-defined-vector answer
+#: costs the same max-agg scan as a real dim.
+_DIM_CACHE: dict[str, tuple[tuple, int | None]] = {}
+_COUNT_CACHE: dict[str, tuple[tuple, int]] = {}
+_EMB_CACHE_MAX = 1024
+
+
+def _embeddings_stat(spark: SparkSession, sf_dir: str, cache: dict, compute):
+    """``compute(embeddings)``, cached per resolved table path while the
+    table's files are unchanged; a path that cannot be stat'ed (remote
+    scheme, missing file) is computed on every call."""
+    local = local_path(os.path.join(sf_dir, "embeddings.parquet"))
+    sig = signature(local) if local is not None else None
+    if sig is None:
+        return compute(load_table(spark, sf_dir, "embeddings"))
+    key = os.path.abspath(local)
+    hit = cache.get(key)
+    if hit is not None and hit[0] == sig:
+        return hit[1]
+    value = compute(load_table(spark, sf_dir, "embeddings"))
+    remember(cache, _EMB_CACHE_MAX, key, (sig, value))
+    return value
 
 
 def corpus_dim_for(spark: SparkSession, sf_dir: str) -> int | None:
     """Cached corpus dimensionality of a testdata directory — the
     SINGLE dim-resolution path for the embedding family (the max-agg
-    pass over the embedding column runs once per directory per
-    session; at 100 TB that column IS the table, so an uncached
-    lookup would double every search's scan cost). None (table has no
-    well-defined vector) is cached like any other answer."""
-    if sf_dir not in _DIM_CACHE:
-        _DIM_CACHE[sf_dir] = corpus_dim(load_table(spark, sf_dir, "embeddings"))
-    return _DIM_CACHE[sf_dir]
+    pass over the embedding column runs once per table version; at
+    100 TB that column IS the table, so an uncached lookup would
+    double every search's scan cost). None (table has no well-defined
+    vector) is cached like any other answer."""
+    return _embeddings_stat(spark, sf_dir, _DIM_CACHE, corpus_dim)
 
 
 def embedding_dim_for(spark: SparkSession, sf_dir: str) -> int:
@@ -249,9 +270,7 @@ def uniform_vectors_for(
 
 def embedding_count_for(spark: SparkSession, sf_dir: str) -> int:
     """Cached row count of the embeddings table (sizes LSH tables)."""
-    if sf_dir not in _COUNT_CACHE:
-        _COUNT_CACHE[sf_dir] = load_table(spark, sf_dir, "embeddings").count()
-    return _COUNT_CACHE[sf_dir]
+    return _embeddings_stat(spark, sf_dir, _COUNT_CACHE, DataFrame.count)
 
 
 def bucket_topk(cand: DataFrame, q: DataFrame, bucket_col: str, k: int = _TOP_K) -> DataFrame:

@@ -22,6 +22,8 @@ from parquet_to_hyper_app_spark.catalog import load_table
 from parquet_to_hyper_app_spark.operators.cleaning import clean_numeric
 from parquet_to_hyper_app_spark.registry import query
 from parquet_to_hyper_app_spark.streaming.source import (
+    conf_scope,
+    discard_stream_dir,
     events_file_stream,
     run_to_memory,
     stream_shuffle_scope,
@@ -82,13 +84,18 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
+    discard_stream_dir(ckpt)
     # an empty/missing source produces zero epochs — no epoch_* dirs —
-    # and the glob read would raise an unrelated PATH_NOT_FOUND; return
-    # an empty frame with the sink schema instead
-    if not glob.glob(os.path.join(out_dir, "epoch_*")):
+    # and reading none would raise an unrelated error; return an empty
+    # frame with the sink schema instead. The epoch directories are
+    # read by name: a glob pattern makes the parquet source probe it as
+    # a streaming-sink metadata path first, which logs a WARN with a
+    # FileNotFoundException stack trace on every run
+    epochs = sorted(glob.glob(os.path.join(out_dir, "epoch_*")))
+    if not epochs:
         out = spark.createDataFrame([], sink_schema)
     else:
-        out = spark.read.schema(sink_schema).parquet(os.path.join(out_dir, "epoch_*"))
+        out = spark.read.schema(sink_schema).parquet(*epochs)
     return out.withColumn("ts", F.expr(_SINK_TS_EXPR))
 
 
@@ -178,6 +185,7 @@ def run_incremental_agg(
             .start()
         )
         q.awaitTermination()
+    discard_stream_dir(ckpt)
     snaps = sorted(glob.glob(os.path.join(out_dir, "snap_*")))
     if not snaps:
         return spark.createDataFrame(
@@ -244,7 +252,15 @@ def run_dedup_watermark(
         .withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
     )
-    out = run_to_memory(stream, qname, ckpt, "append")
+    # append mode emits each key in the micro-batch where it first
+    # appears; the no-data batch availableNow would run after the last
+    # data batch only evicts state, so it is switched off for this
+    # query alone (windowed and session queries need that batch to
+    # emit their final windows)
+    with conf_scope(
+        raw.sparkSession, "spark.sql.streaming.noDataMicroBatches.enabled", "false"
+    ):
+        out = run_to_memory(stream, qname, ckpt, "append")
     # the retained row per key is arrival-order-dependent; the stable,
     # engine-comparable projection is the key + its min event time
     mins = events_batch.groupBy("user_id", "event_type").agg(

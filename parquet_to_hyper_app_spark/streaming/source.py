@@ -47,16 +47,42 @@ STREAM_SHUFFLE_PARTITIONS = int(
 
 
 @contextmanager
-def stream_shuffle_scope(spark: SparkSession):
-    """Scope spark.sql.shuffle.partitions to the streaming-query value
-    for the duration of one start/awaitTermination cycle (the conf is
-    captured when the query starts), restoring the batch value after."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
+def conf_scope(spark: SparkSession, key: str, value: str):
+    """Set one session conf for the duration of a streaming query's
+    start/awaitTermination cycle (a query captures the session confs
+    when it starts) and restore the previous value afterwards, also
+    when the query fails."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set(key, prev)
+
+
+def stream_shuffle_scope(spark: SparkSession):
+    """Scope spark.sql.shuffle.partitions to the streaming-query value,
+    restoring the batch value after (see `conf_scope`)."""
+    return conf_scope(
+        spark, "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
+    )
+
+
+def stream_dir(qname: str) -> str:
+    """The engine-created directory of stream query ``qname``: ``src``
+    holds the source symlink, ``ckpt`` the checkpoint and state store."""
+    return os.path.join(tempfile.gettempdir(), "p2h_spark_stream", qname)
+
+
+def discard_stream_dir(ckpt: str) -> None:
+    """Remove the `stream_dir` that checkpoint ``ckpt`` lives in, once
+    its one-shot query has terminated and nothing reads from it any
+    more. A checkpoint anywhere else (a caller-supplied location) is
+    left alone. Without this every run leaves its directory behind."""
+    base = os.path.dirname(ckpt)
+    if ckpt == os.path.join(stream_dir(os.path.basename(base)), "ckpt"):
+        shutil.rmtree(base, ignore_errors=True)
+
 
 #: user-supplied stream schema: ts read as raw int64 (unit detected below)
 RAW_EVENTS_SCHEMA = (
@@ -135,7 +161,7 @@ def events_file_stream(
     NOT apply any further unit conversion.
     """
     ensure_session_configs(spark)
-    base = os.path.join(tempfile.gettempdir(), "p2h_spark_stream", qname)
+    base = stream_dir(qname)
     src_dir = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(src_dir, exist_ok=True)
@@ -197,7 +223,8 @@ def run_to_memory(stream: DataFrame, qname: str, ckpt: str, output_mode: str) ->
     bound. localCheckpoint detaches the rows from the sink so the temp
     view can be dropped immediately — the checkpointed blocks are
     released by the ContextCleaner when the returned DataFrame is
-    garbage-collected (review r5)."""
+    garbage-collected — and the engine-created stream directory is
+    removed (`discard_stream_dir`)."""
     spark = stream.sparkSession
     with stream_shuffle_scope(spark):
         q = (
@@ -211,4 +238,5 @@ def run_to_memory(stream: DataFrame, qname: str, ckpt: str, output_mode: str) ->
         q.awaitTermination()
     out = spark.table(qname).localCheckpoint(eager=True)
     spark.catalog.dropTempView(qname)
+    discard_stream_dir(ckpt)
     return out

@@ -1862,3 +1862,39 @@ def test_global_rank_cumsum_rank_is_long(spark):
     assert dict(out.dtypes)["r"] == "bigint", dict(out.dtypes)
     rows = {r.token: (r.r, r.cum_n) for r in out.collect()}
     assert rows == {"a": (1, 5), "b": (2, 8), "c": (3, 11), "d": (4, 12)}
+
+
+def test_embedding_caches_follow_table_rewrite(spark, tmp_path):
+    """The dim and row-count caches are keyed by the table's files: an
+    embeddings table rewritten in place with a new dimensionality (and
+    row count) is re-resolved, not filtered against the stale dim."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_to_hyper_app_spark.operators.llm.similarity import (
+        corpus_dim_for,
+        embedding_count_for,
+        uniform_vectors_for,
+    )
+
+    path = str(tmp_path / "embeddings.parquet")
+
+    def write(n, dim):
+        pq.write_table(
+            pa.table({
+                "vec_id": pa.array(range(n), pa.int64()),
+                "embedding": pa.array(
+                    [[float(i + j + 1) for j in range(dim)] for i in range(n)],
+                    pa.list_(pa.float32()),
+                ),
+            }),
+            path,
+        )
+
+    write(3, 4)
+    assert corpus_dim_for(spark, str(tmp_path)) == 4
+    assert embedding_count_for(spark, str(tmp_path)) == 3
+    write(5, 8)
+    assert corpus_dim_for(spark, str(tmp_path)) == 8
+    assert embedding_count_for(spark, str(tmp_path)) == 5
+    assert uniform_vectors_for(spark, str(tmp_path)).count() == 5

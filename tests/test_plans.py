@@ -110,6 +110,40 @@ def test_warm_builds_run_no_jobs(spark):
         assert count_jobs(spark, lambda: fn(spark, SF_SMOKE)) == 0, key
 
 
+#: jobs a warm dedup_containment run (build + noop write) may start at
+#: sf0.001: the widening exchange, the gram index exchange (read by both
+#: sides of the co-occurrence self-join), the count exchange, the eager
+#: checkpoint and the write; AQE may add a broadcast stage
+CONTAINMENT_JOB_BUDGET = 9
+
+
+def test_containment_job_budget(spark):
+    """Jobs-per-key budget for the registered containment miner, which
+    thresholds the co-occurrence counts directly: a candidate phase
+    (df and rank windows, prefix join, pair dedup, final join) would
+    bring back its own exchanges and jobs."""
+    fn = load_all()["dedup_containment"].fn
+
+    def run():
+        fn(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+
+    run()
+    n = count_jobs(spark, run)
+    assert n <= CONTAINMENT_JOB_BUDGET, n
+
+
+def test_registered_containment_plan_has_no_window(spark):
+    """The registered (uncapped) containment plan ranks nothing: no df
+    window, no per-doc prefix rank."""
+    from parquet_to_hyper_app_spark.operators.llm.corpus import containment_frame
+
+    lazy = containment_frame(spark, SF_SMOKE, materialize=False)
+    lazy.foreachPartition(lambda _it: None)
+    plan = physical_plan(lazy)
+    assert "Window" not in plan, plan
+    assert "Generate inline" in plan, plan  # both orientations from one count row
+
+
 def test_whole_stage_codegen_everywhere(executed_stats):
     no_codegen = {
         k

@@ -233,3 +233,89 @@ def test_ts_scale_empty_source_is_identity(spark, tmp_path):
     key = "test-empty-src"
     assert _ts_micros_scale(spark, src, key) == (1, 1)
     assert key not in _TS_SCALE_CACHE
+
+
+def test_dedup_watermark_runs_one_micro_batch(spark):
+    """dropDuplicatesWithinWatermark emits each key in the batch where
+    it first appears, so the registered query runs exactly one (data)
+    micro-batch — no trailing no-data batch that only evicts state —
+    and the session conf it switches for that is restored afterwards,
+    also when the scoped block fails."""
+    import threading
+    import time
+
+    import pytest
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from parquet_to_hyper_app_spark.streaming.sinks import stream_dedup_watermark
+    from parquet_to_hyper_app_spark.streaming.source import conf_scope
+
+    class Batches(StreamingQueryListener):
+        def __init__(self):
+            self.lock = threading.Lock()
+            self.rows: list[int] = []
+            self.terminated = 0
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            with self.lock:
+                self.rows.append(event.progress.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            with self.lock:
+                self.terminated += 1
+
+    conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(conf)
+    listener = Batches()
+    spark.streams.addListener(listener)
+    try:
+        assert stream_dedup_watermark(spark, SF_SMOKE).count() > 0
+        deadline = time.monotonic() + 60
+        while listener.terminated < 1 and time.monotonic() < deadline:
+            time.sleep(0.05)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.terminated == 1
+    assert len(listener.rows) == 1 and listener.rows[0] > 0, listener.rows
+    assert spark.conf.get(conf) == before
+    with pytest.raises(RuntimeError):
+        with conf_scope(spark, conf, "false"):
+            raise RuntimeError("query failed")
+    assert spark.conf.get(conf) == before
+
+
+def test_stream_keys_leave_no_stream_dir(spark, tmp_path):
+    """Every streaming helper removes the engine-created per-query
+    directory (source symlink, checkpoint, state store) once its query
+    has terminated and the result no longer reads it; a caller-supplied
+    checkpoint location is never removed."""
+    import os
+
+    from parquet_to_hyper_app_spark.registry import load_all
+    from parquet_to_hyper_app_spark.streaming.source import discard_stream_dir, stream_dir
+
+    root = os.path.dirname(stream_dir("q"))
+    os.makedirs(root, exist_ok=True)
+    before = set(os.listdir(root))
+    specs = load_all()
+    # run_to_memory, stream_foreach_batch, run_incremental_agg, and a
+    # corpus stream that builds its own source directory
+    for key in (
+        "stream_dedup_watermark",
+        "stream_foreach_batch",
+        "stream_incremental_agg",
+        "stream_quality_gate",
+    ):
+        assert specs[key].fn(spark, SF_SMOKE).count() > 0, key
+    assert set(os.listdir(root)) - before == set()
+
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    discard_stream_dir(str(ckpt))
+    assert ckpt.is_dir()
