@@ -104,9 +104,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
     """Load several tables at once: ``lineitem, orders = load_tables(...)``."""
     return tuple(load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for SQL-first callers."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

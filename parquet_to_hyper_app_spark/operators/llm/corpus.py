@@ -670,7 +670,7 @@ def dedup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs).select("doc_a", "doc_b")
+    pairs = ngram_jaccard_pairs(scan_spread(docs, "doc_id")).select("doc_a", "doc_b")
     labels = connected_components(pairs, docs.select("doc_id"))
     sized = docs.select(
         "doc_id",
@@ -851,19 +851,18 @@ def containment_frame(
                 f"auto_cap_min_s2 must be None or a number >= 0,"
                 f" got {auto_cap_min_s2!r}"
             )
-    docs = load_table(spark, sf_dir, "documents")
+    docs = scan_spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    n_parts = miner_partitions(docs)
     # the canonical tokenize→bigram→distinct→hash frame, shared with
     # ngram_jaccard_pairs. Persisted even where it is read once: without
     # the cache boundary Catalyst pushes the explode's inferred
-    # size(hashes) > 0 filter below bigram_hash_frame's widening
-    # repartition, back into the one-task scan stage (the whole miner
-    # measured ~2.0 s without the persist vs ~1.0 s with it, sf0.01 on
-    # 4 cores)
+    # size(hashes) > 0 filter below the scan_spread repartition, back
+    # into the one-task scan stage (the whole miner measured ~2.0 s
+    # without the persist vs ~1.0 s with it, sf0.01 on 4 cores)
     grams = bigram_hash_frame(docs, persist=materialize)
     cached_df_tab = None
     try:
         occ = grams.select("doc_id", "lang", "n", F.explode("hashes").alias("h"))
-        n_parts = miner_partitions(grams)
         if df_cap is not None:
             df_tab = occ.groupBy("lang", "h").agg(F.count(F.lit(1)).alias("df"))
             if isinstance(df_cap, str):

@@ -25,7 +25,6 @@ rows-only "seeded hashes differ across engines" waiver.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -45,10 +44,7 @@ from parquet_to_hyper_app_spark.operators.llm.similarity import (
 from parquet_to_hyper_app_spark.functions.crosshash import WS
 from parquet_to_hyper_app_spark.operators.llm.text import tokens
 from parquet_to_hyper_app_spark.registry import query
-from parquet_to_hyper_app_spark.sources.scanwidth import (
-    max_partition_bytes,
-    scan_spread,
-)
+from parquet_to_hyper_app_spark.sources.scanwidth import scan_spread
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -530,71 +526,24 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     which case the output itself is quadratic. Sub-threshold mining
     stays the MinHash-LSH path's job.
     """
-    return ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"))
-
-
-#: miner pair-shuffle sizing: target SCAN BYTES per shuffle partition.
-#: Calibrated on the corpus ratio 594 KB of documents.parquet ↔ 256k
-#: exploded gram occurrences at sf0.1 (≈32k occurrences per 64 KB), so
-#: sf0.1 derives ~10 and the session default wins (the bench constant
-#: is untouched) while the r8 x64 stress volume (≈38 MB, 16.4M
-#: occurrences) derives ~580 — the regime where the fixed sf0.1-sized
-#: width was measured to spill (docs/SCALE.md "Round-8 x64 stress":
-#: jaccard 6.4×/doubling at parts=32 vs a clean 2.1× at parts=256).
-#: A heuristic floor-raiser, not a planner: compression ratios vary
-#: by corpus, but being 2-4× off on width is harmless — being 64×
-#: under (conf sized for the wrong SF) is the measured failure.
-_MINER_BYTES_PER_PART = 65_536
-#: backstop against a pathological size estimate, not a tuning knob;
-#: a real cluster raises shuffle.partitions instead
-_MINER_MAX_PARTS = 4096
-
-
-def _scan_bytes(df: DataFrame) -> tuple[int, int]:
-    """(total bytes, file count) of the files feeding df's scan —
-    driver-side metadata only, NO Spark job. (0, 0) when unknown
-    (non-file source, unreadable path, non-local scheme)."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return 0, 0
-    total = 0
-    for uri in files:
-        p = uri
-        if p.startswith("file://"):
-            p = p[len("file://"):]
-        elif p.startswith("file:"):
-            p = p[len("file:"):]
-        elif "://" in p:  # remote FS: size not stat-able from here
-            return 0, 0
-        try:
-            total += os.path.getsize(p)
-        except OSError:
-            return 0, 0
-    return total, len(files)
+    return ngram_jaccard_pairs(
+        scan_spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    )
 
 
 def miner_partitions(docs: DataFrame) -> int:
-    """Input-scaled partition width for the miner family's pinned pair
-    shuffles: max(session shuffle.partitions, scan bytes / 64 KB),
-    capped. The r8 x64 stress showed the fixed session width is
-    harness sizing that stops holding one doubling past what it was
-    tuned for — AQE coalesces small partitions down but never splits
-    big ones up, so when the input outgrows the conf the pinned
-    repartition sites must widen WITH the input, in code, not a flag.
-
-    Derived from file metadata (`_scan_bytes`), never a Spark job: the
-    r9 A/B measured a sum(n)-agg derivation costing ~0.2s of fixed x1
-    overhead per miner call — the exact constant the acceptance gate
-    protects. Unknown-size inputs fall back to the session conf."""
+    """Partition width of the miner family's pinned pair shuffles: the
+    session shuffle width (`spark.sql.shuffle.partitions`, or the
+    default parallelism when that conf is "auto"). The count is
+    explicit so AQE's bytes-blind coalescing cannot squeeze the
+    CPU-bound verify stages onto a few cores; a deployment whose input
+    outgrows the session width raises `spark.sql.shuffle.partitions`.
+    Reads the session conf only, never runs a Spark job."""
     spark = docs.sparkSession
     try:
-        conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except ValueError:  # e.g. "auto" on AQE-auto deployments (review r5)
-        conf_parts = spark.sparkContext.defaultParallelism
-    total, _ = _scan_bytes(docs)
-    derived = -(-total // _MINER_BYTES_PER_PART)  # ceil div
-    return max(conf_parts, min(_MINER_MAX_PARTS, derived))
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:  # "auto" on AQE-auto deployments
+        return spark.sparkContext.defaultParallelism
 
 
 def unordered_cooccurrence(occ: DataFrame, n_parts: int) -> DataFrame:
@@ -616,10 +565,10 @@ def unordered_cooccurrence(occ: DataFrame, n_parts: int) -> DataFrame:
 
     The index is repartitioned ONCE to the miner width on the join key
     and both join sides read that one exchange: the cached grams frame
-    carries the parquet scan's partitioning (ONE partition at bench
-    SF), and without the explicit exchange Spark broadcast-joins one
-    side and runs the whole Σdf²-row stream + partial count on one
-    core (measured 13.6 s vs 1.7 s at sf0.1).
+    is partitioned by doc (or by the scan), not by (lang, h), and
+    without the explicit exchange Spark broadcast-joins one side and
+    runs the whole Σdf²-row stream + partial count on one core
+    (measured 13.6 s vs 1.7 s at sf0.1).
 
     Cost is Σ_g df(g)² rows before the combine — benign on bounded-df
     vocabularies (sf0.1: Σdf² = 19.0M, max df 152), explosive on
@@ -639,17 +588,20 @@ def unordered_cooccurrence(occ: DataFrame, n_parts: int) -> DataFrame:
     )
 
 
-def bigram_hash_frame(
-    docs: DataFrame, persist: bool = True, widen: bool = True
-) -> DataFrame:
+def bigram_hash_frame(docs: DataFrame, persist: bool = True) -> DataFrame:
     """The canonical (doc_id, lang, hashes, n) frame — distinct word
     bigrams of each non-blank doc as int64 xxhash64 values — the Spark
     twin of BIGRAM_SIZED_CTES_TMPL, shared by `ngram_jaccard_pairs`
-    and corpus.dedup_containment (the r6 clone, extracted in r8).
-    Returned PERSISTED (both callers read it ≥3×: df ranking, prefix
-    rows, verify arrays); the caller owns the unpersist().
-    persist=False is the lazy plan-inspection form (miner callers pass
-    their own ``materialize=False`` through).
+    and corpus.containment_frame. Returned PERSISTED (callers read it
+    several times: df ranking, prefix rows, verify arrays); the caller
+    owns the unpersist(). persist=False is the lazy plan-inspection
+    form (miner callers pass their own ``materialize=False`` through).
+
+    Narrow: the frame adds no exchange of its own, so it keeps the
+    partitioning of ``docs``. A caller reading the table widens it
+    once, at the scan, through `scan_spread` (identity on wide
+    layouts); a caller whose frame already sits behind a shuffle
+    passes it as is.
 
     The hard-won shapes live here exactly once:
     - the shared whitespace tokenizer (text.py), lowercased — one
@@ -676,33 +628,6 @@ def bigram_hash_frame(
       generation and per-pair verifies run on int64s; string bytes are
       never rescanned per pair (that rescan alone cost 97 s at sf0.1).
     """
-    # spread the tokenize: a bench-SF documents table is ONE parquet
-    # split, so the whole tokenize+distinct+hash pipeline — and every
-    # downstream read of the cached frame — would run on one core
-    # (measured 3.7s vs 0.8s at sf0.1, r9). Only widen when the scan
-    # is actually narrower than the cores: at real scale the scan is
-    # already wide and the raw-text shuffle would be pure waste. The
-    # scan-width estimate (files, plus maxPartitionBytes splits of
-    # big files) is driver-side metadata — a `.rdd.getNumPartitions()`
-    # probe costs a per-call plan→RDD conversion the r9 A/B could see.
-    # widen=False: the caller KNOWS docs already sits behind a shuffle
-    # (e.g. the pipeline's exact-dedup window) — the byte-based gate
-    # below reads the SCAN's file layout, which says nothing about the
-    # frame's post-shuffle partitioning, so it would re-shuffle an
-    # already-wide frame for nothing (r16; the A/B is in
-    # OPTIMIZATION_r16.md under pipeline_training_corpus_full)
-    spark = docs.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    total, nfiles = _scan_bytes(docs) if widen else (0, 0)
-    if nfiles:
-        # shared suffix-aware conf parse (sources/scanwidth.py): the
-        # inline int(removesuffix('b')) copy of this choked on the '8m'
-        # build_session sets and silently fell back to 128 MB
-        # (ADVICE r15), undercounting splits for 8-128 MB corpora
-        mpb = max_partition_bytes(spark)
-        est_parts = max(nfiles, -(-total // mpb))
-        if est_parts < par:
-            docs = docs.repartition(par)
     toks = tokens(F.lower(F.col("text")))
     grams = docs.filter(F.col("text").rlike(r"\S")).withColumn("__toks", toks).select(
         "doc_id",
@@ -721,20 +646,23 @@ def bigram_hash_frame(
     return out.persist() if persist else out
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame, materialize: bool = True, widen: bool = True
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, materialize: bool = True) -> DataFrame:
     """Exact word-bigram Jaccard pairs (J ≥ 0.5) for any
     (doc_id, lang, text) frame — see `dedup_ngram_jaccard` for the
     prefix-filter scheme and its losslessness proof. Reused by the
     cluster assignment and the oracle-checked full pipeline.
 
+    ``docs`` is mined where it is partitioned: callers reading the
+    table pass it through `scan_spread`, so widening happens once, at
+    the scan; the pair shuffles run at `miner_partitions` (the session
+    width).
+
     materialize=False returns the full LAZY plan (no persist, no eager
     checkpoint) for plan inspection/tests — the same device as
     `verified_near_dup_pairs`; every executing caller keeps the
-    default. widen=False passes through to `bigram_hash_frame` for
-    callers whose input already sits behind a shuffle."""
-    grams = bigram_hash_frame(docs, persist=materialize, widen=widen)
+    default."""
+    n_parts = miner_partitions(docs)
+    grams = bigram_hash_frame(docs, persist=materialize)
     # global total order per lang: (document frequency asc, hash) —
     # prefixes fill with the RAREST bigrams first
     occ = grams.select("doc_id", "lang", "n", F.explode("hashes").alias("h"))
@@ -833,13 +761,8 @@ def ngram_jaccard_pairs(
     # exchange (the explicit hash partitioning satisfies the dedup
     # aggregate's distribution requirement), and a user-specified
     # partition count is exempt from AQE coalescing, so the verify
-    # inherits full width. The width itself is INPUT-SCALED
-    # (miner_partitions, r9): the session conf is sized for the bench
-    # SF, and the r8 x64 stress measured it spilling one doubling past
-    # that (6.4×/doubling at parts=32 vs 2.1× at parts=256).
-    cand = cand.repartition(
-        miner_partitions(grams), "id_a", "id_b"
-    ).dropDuplicates()
+    # inherits full width — the session width (`miner_partitions`).
+    cand = cand.repartition(n_parts, "id_a", "id_b").dropDuplicates()
     # array verify, KEPT over the r9 co-occurrence count by
     # measurement (see the dedup_ngram_jaccard docstring): this
     # miner's candidate set is small enough that per-pair arrays beat
@@ -1021,7 +944,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-mined pair graph (`verified_near_dup_pairs`) slots in when
     sub-threshold shingle mining is wanted instead of exact bigrams."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs).select("doc_a", "doc_b")
+    pairs = ngram_jaccard_pairs(scan_spread(docs, "doc_id")).select("doc_a", "doc_b")
     return connected_components(pairs, docs.select("doc_id")).select("doc_id", "cluster_id")
 
 
@@ -1085,7 +1008,9 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     #: group count ≈ n/2048 · B/2 tasks with bounded memory each
     nblocks = max(2, math.ceil(math.sqrt(n / 2048.0)) * 2)
 
-    emb = uniform_vectors_for(spark, sf_dir).select("vec_id", "embedding")
+    emb = scan_spread(uniform_vectors_for(spark, sf_dir), "vec_id").select(
+        "vec_id", "embedding"
+    )
     blk = F.pmod(F.col("vec_id"), F.lit(nblocks)).cast("int")
     a_side = emb.select(
         "vec_id",
@@ -1322,6 +1247,11 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings, which no bits growth can spread) is bounded-memory —
     its quadratic PAIR OUTPUT is the contract's answer, not a working
     set. The groupBy state is one bucket at a time per task.
+
+    The vectors are read without `scan_spread`: the first wide op is
+    the (table, bucket) groupBy, whose exchange spreads the mapInPandas
+    output anyway, so a widening exchange ahead of it measured no
+    better (OPTIMIZATION_r16.md).
     """
     import numpy as np
     import pandas as pd
@@ -1331,12 +1261,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         embedding_dim_for,
     )
 
-    # spread=False (r16): the other r15 family-spread key the driver
-    # bench contradicted (1.36x vs claimed 0.93); here the first wide
-    # op is the groupBy on (table, bucket) whose exchange spreads the
-    # mapInPandas output anyway — confirm-or-revert A/B in
-    # OPTIMIZATION_r16.md. Reverted per VERDICT r15 item 2.
-    emb = uniform_vectors_for(spark, sf_dir, spread=False)
+    emb = uniform_vectors_for(spark, sf_dir)
     dim = embedding_dim_for(spark, sf_dir)
     bits = _emb_lsh_bits(embedding_count_for(spark, sf_dir))
     # (L·bits) × dim ±1 plane matrix — md5-derived, shared with the oracle

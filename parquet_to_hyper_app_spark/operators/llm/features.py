@@ -368,7 +368,7 @@ def _double_vectors(spark: SparkSession, sf_dir: str):
     """(emb, v): the corpus-dimensionality vectors and their double-cast
     projection — the one projection every quantizer trainer consumes,
     extracted so the sample path and the distributed path cannot drift."""
-    emb = uniform_vectors_for(spark, sf_dir)
+    emb = scan_spread(uniform_vectors_for(spark, sf_dir), "vec_id")
     v = emb.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
     )

@@ -97,16 +97,6 @@ def fake_decode_image(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 DECODE_SCHEMA = "doc_id bigint, width int, height int, pixels binary"
 
 
-def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """STUB shape for video frame sampling: with a real decoder each
-    payload row explodes into frame rows; here the deterministic
-    stand-in emits one 'frame' per payload per sampled index."""
-    return df.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(2))).alias("frame_idx"),
-    ).withColumn("frame_offset", F.col("frame_idx") * every_n)
-
-
 @query(
     "multimodal_features",
     oracle="""

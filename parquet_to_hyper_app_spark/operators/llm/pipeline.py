@@ -171,18 +171,16 @@ def pipeline_training_corpus_full(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle), so the whole composition is value-hash checked. On a
     corpus where sub-threshold shingle mining is preferred, swap
     `ngram_jaccard_pairs` for `verified_near_dup_pairs` (MinHash-LSH,
-    rows-only check) — same pair schema, same drop rule."""
-    # NO scan_spread (r16, tried and reverted — see
-    # pipeline_training_corpus; A/B 1.18 min vs 1.03/1.08 controls)
+    rows-only check) — same pair schema, same drop rule.
+
+    The table is read without `scan_spread` (see
+    `pipeline_training_corpus`), and the miner mines ``survivors``
+    where it already sits: behind the exact-dedup window's exchange
+    (hash of text — well spread), so no widening exchange is added."""
     docs = load_table(spark, sf_dir, "documents")
     survivors = dedup_exact_df(quality_gate(docs)).drop("content_hash")
-    # widen=False: survivors already sits behind the exact-dedup
-    # window's exchange (hash of text — well spread), so the miner's
-    # own byte-gated widen — which reads the SCAN layout, blind to the
-    # shuffle above it — would round-robin the full text rows a second
-    # time for nothing (r16 A/B in OPTIMIZATION_r16.md)
     near_dups = (
-        ngram_jaccard_pairs(survivors, widen=False)
+        ngram_jaccard_pairs(survivors)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )

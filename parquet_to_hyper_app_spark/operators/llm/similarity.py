@@ -183,13 +183,10 @@ def brute_force_topk(
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S32: exact cosine top-3 neighbors for query vectors vec_id<10.
 
-    spread=False (r16): one of the two r15 family-spread keys the
-    driver bench contradicted (1.25x vs claimed 0.70); the r16
-    confirm-or-revert A/B measured the spread variant no better than
-    controls here — the broadcast-probe panel reads the scan ONCE and
-    its per-row cosine work is too small to amortize the extra
-    exchange. Reverted per VERDICT r15 item 2."""
-    emb = uniform_vectors_for(spark, sf_dir, spread=False)
+    The vectors are read without `scan_spread`: the broadcast-probe
+    panel reads the scan once and its per-row cosine work is too small
+    to amortize a widening exchange (A/B in OPTIMIZATION_r16.md)."""
+    emb = uniform_vectors_for(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
     out = brute_force_topk(emb, queries)
     return out.withColumn("rank", F.col("rank").cast("long"))
@@ -242,30 +239,22 @@ def embedding_dim_for(spark: SparkSession, sf_dir: str) -> int:
     return d
 
 
-def uniform_vectors_for(
-    spark: SparkSession, sf_dir: str, spread: bool = True
-) -> DataFrame:
+def uniform_vectors_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-dimensionality vectors of a testdata directory — the
     entry point every search/near-dup operator uses. Dim resolution
     (including the degenerate None) goes through `corpus_dim_for`'s
     cache. A table with no well-defined vector returns the (empty)
     valid set, preserving the graceful-empty contract.
 
-    spread=False opts a consumer out of the scan widening: VERDICT r15
-    flagged similarity_topk and dedup_embedding_lsh as driver-bench
-    contradictions of the r15 family-wide spread (1.25x / 1.36x vs the
-    claimed A/B 0.70 / 0.93) and prescribed confirm-or-revert per
-    consumer; the r16 interleaved A/B is in OPTIMIZATION_r16.md."""
+    Returned at the scan's partitioning. A consumer whose first stage
+    carries per-row vector math (cosine panels, quantizer assignment)
+    widens it once with ``scan_spread(..., "vec_id")``, which is
+    identity on production layouts (sources/scanwidth.py)."""
     emb = load_table(spark, sf_dir, "embeddings")
     d = corpus_dim_for(spark, sf_dir)
     if d is None:
         return valid_vectors(emb)
-    # scan_spread: the per-row vector math every consumer runs first
-    # (cosine panels, LSH bucket hashes, quantizer assignment) would
-    # otherwise execute on ONE core behind a row-group-limited scan;
-    # identity on production layouts (sources/scanwidth.py)
-    vecs = uniform_vectors(emb, d)
-    return scan_spread(vecs, "vec_id") if spread else vecs
+    return uniform_vectors(emb, d)
 
 
 def embedding_count_for(spark: SparkSession, sf_dir: str) -> int:
@@ -505,7 +494,7 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     round()-exact hit count — so `_ivf_oracle()` reproduces the
     entire search+audit+gate pipeline and the driver value-hashes it.
     """
-    emb = uniform_vectors_for(spark, sf_dir)
+    emb = scan_spread(uniform_vectors_for(spark, sf_dir), "vec_id")
     bits = _IVF_BITS
     planes = _ivf_planes(embedding_dim_for(spark, sf_dir))
     v = emb.select(

@@ -137,13 +137,6 @@ def sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stratified_sample(df: DataFrame, col: str, fractions: dict, seed: int = 42) -> DataFrame:
-    """API-parity wrapper over sampleBy (per-stratum Bernoulli
-    sampling). Seeded but partitioning-dependent — use sample_hash's
-    arithmetic scheme when cross-run reproducibility matters."""
-    return df.sampleBy(col, fractions, seed)
-
-
 @query(
     "scd2_history",
     oracle="""

@@ -20,10 +20,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 @dataclass(frozen=True)
 class PlanStats:
     shuffles: int

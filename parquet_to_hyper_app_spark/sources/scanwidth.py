@@ -10,7 +10,7 @@ hash probes, tokenization — that whole pipeline runs on ONE core while
 the rest of the cluster idles (guide §2.5 "input skew: one huge
 unsplittable file … repartition immediately after the read").
 
-`scan_spread(df, *keys)` inserts a pinned-width hash repartition after
+`scan_spread(df, key)` inserts a pinned-width hash repartition after
 the scan ONLY when the measured effective scan parallelism (per file:
 min(row groups, byte splits), summed) is far below the cores. The gate
 makes it scale-adaptive, not a local tuning constant:
@@ -22,22 +22,22 @@ makes it scale-adaptive, not a local tuning constant:
   effective parallelism exceeds the cores, the gate never fires, and
   the plan is untouched — no repartition of a 100 TB fact table ever.
 
+This is the engine's one scan-widening rule: operators widen where
+they read a table, through this function, and nowhere else.
+
 The repartition uses an EXPLICIT partition count (REPARTITION_BY_NUM)
 so AQE's bytes-blind coalescing cannot fold the small local shuffle
 back onto one core, and a caller-supplied high-cardinality column so
-the exchange is deterministic hash partitioning (round-robin would pay
-the sort-before-repartition pass and is only used when no key column
-is available). Row-group counts are read from parquet footers on the
-driver (pyarrow, cached per path under its `filesig` signature) — never
-a Spark job.
+the exchange is deterministic hash partitioning. Row-group counts are
+read from parquet footers with pyarrow in the planning process (cached
+per path under its `filesig` signature) — never a Spark job.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from parquet_to_hyper_app_spark.sources.filesig import local_path, remember, signature
 
@@ -167,16 +167,14 @@ def effective_scan_parallelism(df: DataFrame) -> int | None:
     return total
 
 
-def scan_spread(df: DataFrame, *keys: str | Column) -> DataFrame:
+def scan_spread(df: DataFrame, key: str) -> DataFrame:
     """Widen a row-group-limited scan so first-stage compute
-    parallelizes; identity when the scan is already wide (production
-    file layouts) or can't be measured. See module docstring."""
+    parallelizes, hash-partitioning on column ``key`` at the cores;
+    identity when the scan is already wide (production file layouts)
+    or can't be measured. See module docstring."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     eff = effective_scan_parallelism(df)
     if eff is None or eff * _GATE_RATIO > par:
         return df
-    if keys:
-        cols = [F.col(k) if isinstance(k, str) else k for k in keys]
-        return df.repartition(par, *cols)
-    return df.repartition(par)
+    return df.repartition(par, key)

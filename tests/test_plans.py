@@ -144,6 +144,36 @@ def test_registered_containment_plan_has_no_window(spark):
     assert "Generate inline" in plan, plan  # both orientations from one count row
 
 
+def test_bigram_hash_frame_adds_no_exchange(spark):
+    """The miners' gram frame is narrow: widening happens once, where
+    the table is read (`scan_spread`), so the helper itself plans no
+    exchange even over a one-row-group scan."""
+    from parquet_to_hyper_app_spark.catalog import load_table
+    from parquet_to_hyper_app_spark.operators.llm.dedup import bigram_hash_frame
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    plan = physical_plan(bigram_hash_frame(docs, persist=False))
+    assert "Exchange" not in plan, plan
+
+
+def test_containment_pair_shuffle_runs_at_session_width(spark):
+    """The containment miner's (lang, h) gram-index exchange is pinned
+    at the session shuffle width, whatever the input size. Checked on
+    the lazy physical plan, without executing it."""
+    import os
+    import re
+
+    from parquet_to_hyper_app_spark.operators.llm.corpus import containment_frame
+
+    sf01 = os.path.join(os.path.dirname(SF_SMOKE), "sf0.1")
+    lazy = containment_frame(spark, sf01, materialize=False)
+    plan = physical_plan(lazy)
+    widths = re.findall(r"hashpartitioning\(lang#\d+, h#\d+L?, (\d+)\)", plan)
+    assert widths, plan
+    want = spark.conf.get("spark.sql.shuffle.partitions")
+    assert set(widths) == {want}, (widths, want)
+
+
 def test_whole_stage_codegen_everywhere(executed_stats):
     no_codegen = {
         k

@@ -73,7 +73,7 @@ VERDICTS: dict[str, tuple[str, str]] = {
     # --- examined, left alone with a measured/structural reason ---
     "join_full_outer": ("EXAMINED", "SMJ is the only scalable full-outer; SHJ conf A/B'd 0.98-1.12x (rejected)"),
     "join_bucketed": ("EXAMINED", "zero-exchange bucketed SMJ; SHJ conf A/B 1.16x (rejected)"),
-    "dedup_ngram_jaccard": ("EXAMINED", "PPJoin miner, r8-r13 measured shapes; accepted residual (VERDICT r14), width input-scaled"),
+    "dedup_ngram_jaccard": ("EXAMINED", "PPJoin miner, r8-r13 measured shapes; accepted residual (VERDICT r14), pair shuffles at session width"),
     "dedup_containment": ("EXAMINED", "prefix+cooc verify, accepted residual; pinned-width pair dedup deliberate"),
     "dedup_substring": ("EXAMINED", "hashed span dedup, one uniform gram-key shuffle; miner family"),
     "dedup_clusters": ("EXAMINED", "bounded-iteration connected components; cost is job-chain fixed overhead locally"),
@@ -107,7 +107,7 @@ VERDICTS: dict[str, tuple[str, str]] = {
 #: module-path fragment → default (action, reason) for unlisted keys
 MODULE_DEFAULTS = [
     ("streaming/", ("EXAMINED", "availableNow micro-batch machinery dominates locally; state partitions scale via conf (source.py), results partition-independent")),
-    ("llm/corpus", ("EXAMINED", "corpus/miner family: shapes measured r8-r13 (SCALE.md); first stage either widened upstream (bigram_hash_frame) or exchange-immediate")),
+    ("llm/corpus", ("EXAMINED", "corpus/miner family: shapes measured r8-r13 (SCALE.md); first stage either widened at the scan (scan_spread) or exchange-immediate")),
     ("llm/text", ("EXAMINED", "per-row text op below 0.5s; decode-bound")),
     ("llm/features", ("EXAMINED", "vocab-bounded feature op; widened via shared entry points where measured")),
     ("llm/dedup", ("EXAMINED", "miner family; candidate/verify shapes settled with prior-round measurements")),

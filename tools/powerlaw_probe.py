@@ -92,8 +92,11 @@ def df_shape(spark, probe_dir: str, caps: list[int]) -> dict:
 
     from parquet_to_hyper_app_spark.catalog import load_table
     from parquet_to_hyper_app_spark.operators.llm.dedup import bigram_hash_frame
+    from parquet_to_hyper_app_spark.sources.scanwidth import scan_spread
 
-    grams = bigram_hash_frame(load_table(spark, probe_dir, "documents"))
+    grams = bigram_hash_frame(
+        scan_spread(load_table(spark, probe_dir, "documents"), "doc_id")
+    )
     occ = grams.select("doc_id", "lang", F.explode("hashes").alias("h"))
     df_tab = occ.groupBy("lang", "h").agg(F.count(F.lit(1)).alias("df"))
     aggs = [
