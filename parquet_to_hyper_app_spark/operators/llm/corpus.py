@@ -40,6 +40,11 @@ from parquet_to_hyper_app_spark.operators.llm.text import (
 )
 from parquet_to_hyper_app_spark.registry import query
 from parquet_to_hyper_app_spark.sources.scanwidth import scan_spread
+from parquet_to_hyper_app_spark.streaming.source import run_to_memory, stream_run, table_stream
+
+#: the documents table as the stream keys read it (a file stream needs
+#: an explicit schema)
+DOCUMENTS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
 
 #: contamination n-gram order: long enough that a shared gram implies a
 #: copied span, short enough to catch partial overlap (WMT/benchmark
@@ -1694,47 +1699,17 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     source per micro-batch. Complete mode re-emits the small rollup,
     never the corpus.
     """
-    import os
-    import uuid
-
-    from parquet_to_hyper_app_spark.streaming.source import (
-        ensure_session_configs,
-        run_to_memory,
-        stream_dir,
-    )
-
-    ensure_session_configs(spark)
-    qname = f"qg_{uuid.uuid4().hex[:8]}"
-    base = stream_dir(qname)
-    src_dir = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    # qname is a fresh uuid → the dir is new; no stale-link repair
-    # needed (that logic in events_file_stream exists for REUSED names)
-    os.symlink(
-        os.path.abspath(os.path.join(sf_dir, "documents.parquet")),
-        os.path.join(src_dir, "documents.parquet"),
-    )
-    schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    # recursiveFileLookup: the corpus may be a single parquet FILE (the
-    # driver testdata) or a DIRECTORY of part files (any Spark-written
-    # table — the scale probe's replicas); the stream listing does not
-    # descend into subdirectories on its own (found by the x16 probe:
-    # 0 rows streamed from a directory-shaped corpus)
-    docs = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-    )
-    agg = (
-        gopher_flags(docs)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(F.col("passes_gopher"), 1).otherwise(0)).alias("n_pass"),
+    with stream_run() as run:
+        docs = table_stream(spark, sf_dir, "documents", DOCUMENTS_SCHEMA, run)
+        agg = (
+            gopher_flags(docs)
+            .groupBy("source")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum(F.when(F.col("passes_gopher"), 1).otherwise(0)).alias("n_pass"),
+            )
         )
-    )
-    out = run_to_memory(agg, qname, ckpt, "complete")
+        out = run_to_memory(agg, run, "complete")
     return out.select(
         "source",
         "n_docs",
@@ -1852,56 +1827,35 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded with a watermark over arrival time, unbounded here only
     because availableNow runs one bounded batch.
     """
-    import os
-    import uuid
-
-    from parquet_to_hyper_app_spark.streaming.source import (
-        ensure_session_configs,
-        run_to_memory,
-        stream_dir,
-    )
-
-    ensure_session_configs(spark)
-    qname = f"sid_{uuid.uuid4().hex[:8]}"
-    base_dir = stream_dir(qname)
-    src_dir = os.path.join(base_dir, "src")
-    ckpt = os.path.join(base_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    os.symlink(
-        os.path.abspath(os.path.join(sf_dir, "documents.parquet")),
-        os.path.join(src_dir, "documents.parquet"),
-    )
-    schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-        .filter((F.col("doc_id") % _INCR_MOD == 0) & F.col("text").isNotNull())
-        .select("doc_id", "source", F.sha2(F.col("text"), 256).alias("content_hash"))
-    )
     base = (
         load_table(spark, sf_dir, "documents")
         .filter((F.col("doc_id") % _INCR_MOD != 0) & F.col("text").isNotNull())
         .select(F.sha2(F.col("text"), 256).alias("content_hash"))
         .distinct()
     )
-    # within-stream dedup is a complete-mode MIN-STRUCT aggregation,
-    # NOT dropDuplicates: dropDuplicates keeps whichever duplicate a
-    # partition happens to deliver first — nondeterministic across
-    # runs, while the oracle (and the batch twin) pin the lowest
-    # doc_id. The anti-join runs BEFORE the aggregation (stream-static
-    # joins must precede streaming aggregations).
-    survivors = (
-        stream.join(base, "content_hash", "left_anti")
-        .groupBy("content_hash")
-        .agg(F.min(F.struct("doc_id", "source")).alias("best"))
-        .select(
-            F.col("best.doc_id").alias("doc_id"),
-            F.col("best.source").alias("source"),
-            "content_hash",
+    with stream_run() as run:
+        stream = (
+            table_stream(spark, sf_dir, "documents", DOCUMENTS_SCHEMA, run)
+            .filter((F.col("doc_id") % _INCR_MOD == 0) & F.col("text").isNotNull())
+            .select("doc_id", "source", F.sha2(F.col("text"), 256).alias("content_hash"))
         )
-    )
-    return run_to_memory(survivors, qname, ckpt, "complete")
+        # within-stream dedup is a complete-mode MIN-STRUCT aggregation,
+        # NOT dropDuplicates: dropDuplicates keeps whichever duplicate a
+        # partition happens to deliver first — nondeterministic across
+        # runs, while the oracle (and the batch twin) pin the lowest
+        # doc_id. The anti-join runs BEFORE the aggregation (stream-static
+        # joins must precede streaming aggregations).
+        survivors = (
+            stream.join(base, "content_hash", "left_anti")
+            .groupBy("content_hash")
+            .agg(F.min(F.struct("doc_id", "source")).alias("best"))
+            .select(
+                F.col("best.doc_id").alias("doc_id"),
+                F.col("best.source").alias("source"),
+                "content_hash",
+            )
+        )
+        return run_to_memory(survivors, run, "complete")
 
 
 #: exact-quota stratified sample size (per language). Rate-based

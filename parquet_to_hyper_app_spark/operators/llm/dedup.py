@@ -595,7 +595,7 @@ def bigram_hash_frame(docs: DataFrame, persist: bool = True) -> DataFrame:
     and corpus.containment_frame. Returned PERSISTED (callers read it
     several times: df ranking, prefix rows, verify arrays); the caller
     owns the unpersist(). persist=False is the lazy plan-inspection
-    form (miner callers pass their own ``materialize=False`` through).
+    form.
 
     Narrow: the frame adds no exchange of its own, so it keeps the
     partitioning of ``docs``. A caller reading the table widens it
@@ -646,7 +646,7 @@ def bigram_hash_frame(docs: DataFrame, persist: bool = True) -> DataFrame:
     return out.persist() if persist else out
 
 
-def ngram_jaccard_pairs(docs: DataFrame, materialize: bool = True) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     """Exact word-bigram Jaccard pairs (J ≥ 0.5) for any
     (doc_id, lang, text) frame — see `dedup_ngram_jaccard` for the
     prefix-filter scheme and its losslessness proof. Reused by the
@@ -655,14 +655,9 @@ def ngram_jaccard_pairs(docs: DataFrame, materialize: bool = True) -> DataFrame:
     ``docs`` is mined where it is partitioned: callers reading the
     table pass it through `scan_spread`, so widening happens once, at
     the scan; the pair shuffles run at `miner_partitions` (the session
-    width).
-
-    materialize=False returns the full LAZY plan (no persist, no eager
-    checkpoint) for plan inspection/tests — the same device as
-    `verified_near_dup_pairs`; every executing caller keeps the
-    default."""
+    width)."""
     n_parts = miner_partitions(docs)
-    grams = bigram_hash_frame(docs, persist=materialize)
+    grams = bigram_hash_frame(docs)
     # global total order per lang: (document frequency asc, hash) —
     # prefixes fill with the RAREST bigrams first
     occ = grams.select("doc_id", "lang", "n", F.explode("hashes").alias("h"))
@@ -785,8 +780,6 @@ def ngram_jaccard_pairs(docs: DataFrame, materialize: bool = True) -> DataFrame:
             F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "jaccard"
         )
     )
-    if not materialize:
-        return out
     # the (small) pair set materializes eagerly so the corpus-wide
     # hash-array cache releases now, not at session end (same pattern
     # as verified_near_dup_pairs)

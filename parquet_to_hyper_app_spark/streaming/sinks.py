@@ -10,10 +10,10 @@ stream, the streaming version of the reference's convert pipeline
 
 from __future__ import annotations
 
+import functools
 import glob
 import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,10 +23,10 @@ from parquet_to_hyper_app_spark.operators.cleaning import clean_numeric
 from parquet_to_hyper_app_spark.registry import query
 from parquet_to_hyper_app_spark.streaming.source import (
     conf_scope,
-    discard_stream_dir,
     events_file_stream,
+    run_available,
     run_to_memory,
-    stream_shuffle_scope,
+    stream_run,
 )
 
 #: the sink persists the stream's source-normalized int64-µs ts; the
@@ -58,33 +58,27 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     null numerics must come out CLEANED, not raw — the earlier
     `SELECT * FROM events` oracle silently assumed clean input and
     flipped on the first dirty row (caught by the dirty fuzz sweep)."""
-    qname = f"fb_{uuid.uuid4().hex[:8]}"
-    raw, ckpt = events_file_stream(spark, sf_dir, qname)
-    out_dir = os.path.join(tempfile.gettempdir(), "p2h_spark_fb", qname, "out")
-    # the schema every epoch is written with (each batch has raw's schema)
-    sink_schema = clean_numeric(raw, exclude=("ts",)).schema
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # idempotence comes from keying the write by epoch: a replayed
-        # batch OVERWRITES its own epoch directory instead of appending
-        # duplicates (plain append would double rows on retry/restart).
-        # ts is excluded from cleaning: in the stream it is still the
-        # int64 µs column, and int-cleaning would coalesce a NULL event
-        # time to epoch 1970 while the batch convert (timestamp-typed
-        # there) and the oracle keep NULL (review r5)
-        clean_numeric(batch_df, exclude=("ts",)).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch_{epoch_id}")
+    with stream_run() as run:
+        raw = events_file_stream(spark, sf_dir, run)
+        out_dir = os.path.join(
+            tempfile.gettempdir(), "p2h_spark_fb", os.path.basename(run), "out"
         )
+        # the schema every epoch is written with (each batch has raw's schema)
+        sink_schema = clean_numeric(raw, exclude=("ts",)).schema
 
-    with stream_shuffle_scope(spark):
-        q = (
-            raw.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    discard_stream_dir(ckpt)
+        def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+            # idempotence comes from keying the write by epoch: a replayed
+            # batch OVERWRITES its own epoch directory instead of appending
+            # duplicates (plain append would double rows on retry/restart).
+            # ts is excluded from cleaning: in the stream it is still the
+            # int64 µs column, and int-cleaning would coalesce a NULL event
+            # time to epoch 1970 while the batch convert (timestamp-typed
+            # there) and the oracle keep NULL
+            clean_numeric(batch_df, exclude=("ts",)).write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"epoch_{epoch_id}")
+            )
+
+        run_available(spark, raw.writeStream.foreachBatch(write_batch), run)
     # an empty/missing source produces zero epochs — no epoch_* dirs —
     # and reading none would raise an unrelated error; return an empty
     # frame with the sink schema instead. The epoch directories are
@@ -126,10 +120,10 @@ def stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the LAST snapshot, so retries cannot double-count. The final
     table equals the batch GROUP BY — the oracle.
     """
-    qname = f"ia_{uuid.uuid4().hex[:8]}"
-    raw, ckpt = events_file_stream(spark, sf_dir, qname)
-    out_dir = os.path.join(tempfile.gettempdir(), "p2h_spark_ia", qname)
-    return run_incremental_agg(spark, raw, ckpt, out_dir)
+    with stream_run() as run:
+        raw = events_file_stream(spark, sf_dir, run)
+        out_dir = os.path.join(tempfile.gettempdir(), "p2h_spark_ia", os.path.basename(run))
+        return run_incremental_agg(spark, raw, run, out_dir)
 
 
 def merge_epoch(batch_df: DataFrame, epoch_id: int, out_dir: str) -> None:
@@ -169,23 +163,16 @@ def merge_epoch(batch_df: DataFrame, epoch_id: int, out_dir: str) -> None:
 
 
 def run_incremental_agg(
-    spark: SparkSession, raw: DataFrame, ckpt: str, out_dir: str
+    spark: SparkSession, raw: DataFrame, run: str, out_dir: str
 ) -> DataFrame:
-    """Drive the incremental rollup over any events-schema stream and
-    return the final snapshot (see `stream_incremental_agg`). Separated
-    from the registry query so tests can feed a multi-file source with
-    maxFilesPerTrigger=1 and prove the per-epoch merge is genuinely
-    incremental (>1 snapshot, same final table)."""
-    import functools
-    with stream_shuffle_scope(spark):
-        q = (
-            raw.writeStream.foreachBatch(functools.partial(merge_epoch, out_dir=out_dir))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    discard_stream_dir(ckpt)
+    """Drive the incremental rollup over any events-schema stream in
+    run ``run`` and return the final snapshot, read from ``out_dir``
+    (see `stream_incremental_agg`). Separated from the registry query
+    so tests can feed a multi-file source with maxFilesPerTrigger=1 and
+    prove the per-epoch merge is genuinely incremental (>1 snapshot,
+    same final table)."""
+    writer = raw.writeStream.foreachBatch(functools.partial(merge_epoch, out_dir=out_dir))
+    run_available(spark, writer, run)
     snaps = sorted(glob.glob(os.path.join(out_dir, "snap_*")))
     if not snaps:
         return spark.createDataFrame(
@@ -219,19 +206,18 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow's single batch every key dedups exactly once, so the
     emitted key set equals DISTINCT and first_seen equals min(ts).
     """
-    qname = f"ddw_{uuid.uuid4().hex[:8]}"
-    raw, ckpt = events_file_stream(spark, sf_dir, qname)
-    return run_dedup_watermark(raw, qname, ckpt, load_table(spark, sf_dir, "events"))
+    with stream_run() as run:
+        raw = events_file_stream(spark, sf_dir, run)
+        return run_dedup_watermark(raw, run, load_table(spark, sf_dir, "events"))
 
 
-def run_dedup_watermark(
-    raw: DataFrame, qname: str, ckpt: str, events_batch: DataFrame
-) -> DataFrame:
-    """Drive the bounded-state dedup over any events-schema stream and
-    project the engine-comparable result (see `stream_dedup_watermark`).
-    Separated from the registry query so tests can feed a multi-file
-    source with maxFilesPerTrigger=1 and prove the oracle equivalence
-    survives keys re-emitted after watermark state eviction.
+def run_dedup_watermark(raw: DataFrame, run: str, events_batch: DataFrame) -> DataFrame:
+    """Drive the bounded-state dedup over any events-schema stream in
+    run ``run`` and project the engine-comparable result (see
+    `stream_dedup_watermark`). Separated from the registry query so
+    tests can feed a multi-file source with maxFilesPerTrigger=1 and
+    prove the oracle equivalence survives keys re-emitted after
+    watermark state eviction.
 
     Contract (review r5): batch-GROUP-BY equivalence holds when no
     key's FIRST occurrence arrives in a micro-batch behind the already-
@@ -260,7 +246,7 @@ def run_dedup_watermark(
     with conf_scope(
         raw.sparkSession, "spark.sql.streaming.noDataMicroBatches.enabled", "false"
     ):
-        out = run_to_memory(stream, qname, ckpt, "append")
+        out = run_to_memory(stream, run, "append")
     # the retained row per key is arrival-order-dependent; the stable,
     # engine-comparable projection is the key + its min event time
     mins = events_batch.groupBy("user_id", "event_type").agg(

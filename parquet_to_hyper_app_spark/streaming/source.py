@@ -1,23 +1,27 @@
-"""Shared file-stream source plumbing for the events table.
+"""Shared file-stream plumbing: one lifecycle for every streaming run.
 
-One place owns: the raw on-disk schema of events.parquet, the
-NORMALIZATION of its int64 ``ts`` column to microseconds, the symlinked
-source directory (the file stream source requires a directory), and
-the per-query checkpoint location. Every streaming query builds on
-this — a schema or convention change happens here once.
+Lifecycle invariant: one run, one directory, removed on exit. Every
+streaming query runs inside `stream_run()`, which creates a fresh
+directory ``<tmp>/p2h_spark_stream/<run>/`` (``src/`` holds the source
+symlink, ``ckpt/`` the checkpoint and state store) and removes it when
+the block exits, also when the query fails. `table_stream` is the one
+``readStream`` of the package, `run_available` the one availableNow
+driver, and `run_to_memory` drops its memory-sink view on exit, also
+on failure — a long-lived driver accumulates neither directories nor
+views, however many runs fail.
 
-Why normalization lives HERE and nowhere else: the unit the parquet
-reader hands back for an int64-typed ``ts`` depends on the file's
-physical timestamp annotation and the read path — an inferred batch
-read under ``nanosAsLong`` yields raw nanos, while a user-schema
-``ts bigint`` read (the only form ``readStream`` supports) converts
-TIMESTAMP(MICROS) data to micros as-is. Round 2 shipped the ns→µs
-``div 1000`` in four downstream queries on top of an already-µs
-stream, shifting every streamed timestamp 1000× into 1970
-(CORRECTNESS_r02: stream_watermark_late 0/3380 rows). The stream
-source now detects the on-disk unit once per directory (magnitude
-probe on one row — epoch-2000+ data differs by 10^3 per unit, so the
-bands are unambiguous) and every caller receives int64 MICROS.
+This module also owns the raw on-disk schema of events.parquet and the
+NORMALIZATION of its int64 ``ts`` column to microseconds, and nothing
+downstream converts units again. The unit the parquet reader hands
+back for an int64-typed ``ts`` depends on the file's physical
+timestamp annotation and the read path: an inferred batch read under
+``nanosAsLong`` yields raw nanos, while a user-schema ``ts bigint``
+read (the only form ``readStream`` supports) converts TIMESTAMP(MICROS)
+data to micros as-is. A second ``div 1000`` downstream shifts every
+streamed timestamp 1000× into 1970. `events_file_stream` detects the
+on-disk unit once per file version (magnitude probe — epoch-2000+ data
+differs by 10^3 per unit, so the bands are unambiguous) and every
+caller receives int64 MICROS.
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from parquet_to_hyper_app_spark.session import ensure_session_configs
 from parquet_to_hyper_app_spark.sources.filesig import remember, signature
@@ -68,20 +73,60 @@ def stream_shuffle_scope(spark: SparkSession):
     )
 
 
-def stream_dir(qname: str) -> str:
-    """The engine-created directory of stream query ``qname``: ``src``
-    holds the source symlink, ``ckpt`` the checkpoint and state store."""
-    return os.path.join(tempfile.gettempdir(), "p2h_spark_stream", qname)
+@contextmanager
+def stream_run():
+    """One streaming run's directory: a fresh
+    ``<tmp>/p2h_spark_stream/<run>/`` for the source link (``src``) and
+    the checkpoint (``ckpt``), removed when the block exits — also when
+    the query fails. Everything a run returns must be detached from it
+    (`run_to_memory`) or live elsewhere (the foreachBatch sinks)."""
+    root = os.path.join(tempfile.gettempdir(), "p2h_spark_stream")
+    os.makedirs(root, exist_ok=True)
+    run = tempfile.mkdtemp(dir=root)
+    try:
+        yield run
+    finally:
+        shutil.rmtree(run, ignore_errors=True)
 
 
-def discard_stream_dir(ckpt: str) -> None:
-    """Remove the `stream_dir` that checkpoint ``ckpt`` lives in, once
-    its one-shot query has terminated and nothing reads from it any
-    more. A checkpoint anywhere else (a caller-supplied location) is
-    left alone. Without this every run leaves its directory behind."""
-    base = os.path.dirname(ckpt)
-    if ckpt == os.path.join(stream_dir(os.path.basename(base)), "ckpt"):
-        shutil.rmtree(base, ignore_errors=True)
+def run_available(spark: SparkSession, writer: DataStreamWriter, run: str) -> None:
+    """Drive ``writer`` to completion: checkpoint in ``run``,
+    availableNow trigger, stream shuffle width. The one start/await
+    of the package."""
+    with stream_shuffle_scope(spark):
+        q = (
+            writer.option("checkpointLocation", os.path.join(run, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+
+def table_stream(
+    spark: SparkSession, sf_dir: str, table: str, schema: str, run: str
+) -> DataFrame:
+    """File stream of ``<sf_dir>/<table>.parquet`` read with ``schema``.
+
+    The file stream source requires a directory, so the table is linked
+    into ``run/src``: one source per run (a second call on the same run
+    raises instead of streaming both tables). recursiveFileLookup: the
+    table may be a single parquet FILE (driver testdata) or a
+    Spark-written DIRECTORY of part files (scale-probe replicas, any
+    real table) — the stream listing does not descend into
+    subdirectories on its own, so a directory-shaped table would stream
+    0 rows.
+    """
+    ensure_session_configs(spark)
+    src = os.path.join(run, "src")
+    os.mkdir(src)
+    # absolutize: a relative sf_dir would make the link dangle
+    name = f"{table}.parquet"
+    os.symlink(os.path.abspath(os.path.join(sf_dir, name)), os.path.join(src, name))
+    return (
+        spark.readStream.schema(schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+    )
 
 
 #: user-supplied stream schema: ts read as raw int64 (unit detected below)
@@ -92,8 +137,8 @@ RAW_EVENTS_SCHEMA = (
 
 #: resolved events.parquet path → (file signature, detected (divisor,
 #: multiplier) to µs). Keyed by the RESOLVED path (stable across
-#: queries) — the per-query symlink dir embeds a uuid and would never
-#: hit; the signature re-probes a rewrite in place that may carry a
+#: queries) — each run's source dir is new and would never hit; the
+#: signature re-probes a rewrite in place that may carry a
 #: different physical unit, replacing the path's entry (see `filesig`).
 _TS_SCALE_CACHE: dict[str, tuple[tuple, tuple[int, int]]] = {}
 _TS_SCALE_CACHE_MAX = 1024
@@ -150,93 +195,36 @@ def _ts_micros_scale(
     return scale
 
 
-def events_file_stream(
-    spark: SparkSession, sf_dir: str, qname: str
-) -> tuple[DataFrame, str]:
-    """Events file stream (+ checkpoint path) for query `qname`.
+def events_file_stream(spark: SparkSession, sf_dir: str, run: str) -> DataFrame:
+    """Events file stream of run ``run`` (see `table_stream`).
 
     The returned DataFrame has RAW_EVENTS_SCHEMA with ``ts`` already
     normalized to int64 MICROSECONDS regardless of the on-disk unit —
     callers build event time with ``timestamp_micros(ts)`` and must
     NOT apply any further unit conversion.
     """
-    ensure_session_configs(spark)
-    base = stream_dir(qname)
-    src_dir = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    link = os.path.join(src_dir, "events.parquet")
-    # absolutize: a relative sf_dir would make the symlink resolve
-    # against /tmp (dangling) while batch reads still worked
-    target = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    # lexists + target check (review r5): the base dir is keyed only by
-    # qname under the persistent tempdir, so a reused qname from an
-    # earlier run leaves a stale link. os.path.exists FOLLOWS the link:
-    # a dangling one looked absent (os.symlink then raised
-    # FileExistsError) and a live one pointing at an OLD corpus was
-    # silently streamed against the old checkpoint (zero new epochs —
-    # an empty result presented as legitimate). Repoint + drop the
-    # checkpoint whenever the target changed.
-    if os.path.lexists(link):
-        if not os.path.islink(link):
-            # a leftover regular file/dir at the link path (interrupted
-            # run, copied tree): os.readlink would raise EINVAL — treat
-            # it as stale state and repair exactly like a repoint
-            # (review r5)
-            if os.path.isdir(link):
-                shutil.rmtree(link, ignore_errors=True)
-            else:
-                os.unlink(link)
-            shutil.rmtree(ckpt, ignore_errors=True)
-            os.symlink(target, link)
-        elif os.readlink(link) != target:
-            os.unlink(link)
-            shutil.rmtree(ckpt, ignore_errors=True)
-            os.symlink(target, link)
-    else:
-        os.symlink(target, link)
-    # recursiveFileLookup: the events table may be a single parquet
-    # FILE (driver testdata) or a Spark-written DIRECTORY of part
-    # files (scale-probe replicas, any real table) — the stream file
-    # listing does not descend into subdirectories on its own, so a
-    # directory-shaped target silently streamed 0 rows (found by the
-    # r6 x16 probe against stream_quality_gate's identical read)
-    stream = (
-        spark.readStream.schema(RAW_EVENTS_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-    )
-    div, mul = _ts_micros_scale(spark, src_dir, os.path.realpath(link))
+    stream = table_stream(spark, sf_dir, "events", RAW_EVENTS_SCHEMA, run)
+    target = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
+    div, mul = _ts_micros_scale(spark, os.path.join(run, "src"), target)
     if (div, mul) != (1, 1):
         stream = stream.withColumn("ts", F.expr(f"ts div {div} * {mul}"))
-    return stream, ckpt
+    return stream
 
 
-def run_to_memory(stream: DataFrame, qname: str, ckpt: str, output_mode: str) -> DataFrame:
+def run_to_memory(stream: DataFrame, run: str, output_mode: str) -> DataFrame:
     """Drive a streaming DataFrame to completion into a memory sink
-    (availableNow) and return the result. One definition of the
-    writeStream boilerplate for every streaming query.
+    (`run_available`) and return the result, detached from the run.
 
     The memory sink pins the full result in the driver behind a
-    session-lifetime temp view; qnames are uuids, so repeated runs in
-    one session (parity sweeps, fuzz rounds) would accumulate without
-    bound. localCheckpoint detaches the rows from the sink so the temp
-    view can be dropped immediately — the checkpointed blocks are
-    released by the ContextCleaner when the returned DataFrame is
-    garbage-collected — and the engine-created stream directory is
-    removed (`discard_stream_dir`)."""
+    session-lifetime temp view named after the run. localCheckpoint
+    detaches the rows from the sink so the view is dropped on exit,
+    also when the query fails — the checkpointed blocks are released by
+    the ContextCleaner when the returned DataFrame is garbage-collected."""
     spark = stream.sparkSession
-    with stream_shuffle_scope(spark):
-        q = (
-            stream.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(qname).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(qname)
-    discard_stream_dir(ckpt)
-    return out
+    view = os.path.basename(run)
+    writer = stream.writeStream.outputMode(output_mode).format("memory").queryName(view)
+    try:
+        run_available(spark, writer, run)
+        return spark.table(view).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(view)

@@ -14,7 +14,6 @@ availableNow run the oracle checks).
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterable, Iterator
 from decimal import ROUND_HALF_UP, Decimal
 
@@ -25,7 +24,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from parquet_to_hyper_app_spark.registry import query
-from parquet_to_hyper_app_spark.streaming.source import events_file_stream, run_to_memory
+from parquet_to_hyper_app_spark.streaming.source import (
+    events_file_stream,
+    run_to_memory,
+    stream_run,
+)
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double, last_seen timestamp"
 #: state carries integer CENTS, not float dollars — accumulating float
@@ -151,20 +154,20 @@ def stream_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch GROUP BY — which is the oracle. Values accumulate in integer
     cents inside the state update so the result is order-independent.
     """
-    qname = f"state_{uuid.uuid4().hex[:8]}"
-    raw, ckpt = events_file_stream(spark, sf_dir, qname)
-    stream = (
-        raw.withColumn("ts", F.expr("timestamp_micros(ts)"))
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_profile,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+    with stream_run() as run:
+        raw = events_file_stream(spark, sf_dir, run)
+        stream = (
+            raw.withColumn("ts", F.expr("timestamp_micros(ts)"))
+            .groupBy("user_id")
+            .applyInPandasWithState(
+                _update_profile,
+                outputStructType=OUTPUT_SCHEMA,
+                stateStructType=STATE_SCHEMA,
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            )
         )
-    )
-    out = run_to_memory(stream, qname, ckpt, "update")
+        out = run_to_memory(stream, run, "update")
     # update mode emits one profile row per user PER BATCH; keep only
     # each user's latest state (n_events grows monotonically) so a
     # multi-file/multi-batch source still equals the batch GROUP BY

@@ -6,8 +6,8 @@ same `F.window`/`F.session_window` expressions run unchanged under
 DuckDB oracle can therefore value-check the windowing logic.
 
 S38 is a *real* streaming query: file source → withWatermark →
-tumbling window → append-mode memory sink, driven to completion with
-`trigger(availableNow=True)`. Append mode only emits windows closed by
+tumbling window → append-mode memory sink, driven to completion by
+the availableNow trigger (`source.run_available`). Append mode only emits windows closed by
 the final watermark (max event time − 10 min); the oracle mirrors that
 eviction rule in SQL.
 
@@ -19,15 +19,17 @@ store the same way.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_to_hyper_app_spark.catalog import load_table
 from parquet_to_hyper_app_spark.functions.exact import dec2, exact_sum
 from parquet_to_hyper_app_spark.registry import query
-from parquet_to_hyper_app_spark.streaming.source import events_file_stream, run_to_memory
+from parquet_to_hyper_app_spark.streaming.source import (
+    events_file_stream,
+    run_to_memory,
+    stream_run,
+)
 
 
 @query(
@@ -158,23 +160,23 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     eviction rule. Windows still open at end-of-stream stay in state
     and are not emitted, exactly as they would on a live stream.
     """
-    qname = f"wm_{uuid.uuid4().hex[:8]}"
-    raw, ckpt = events_file_stream(spark, sf_dir, qname)
-    stream = (
-        raw
-        # source-normalized µs → TIMESTAMP (watermarks need the
-        # tz-aware type; session tz is UTC so instants == wall clock)
-        .withColumn("ts", F.expr("timestamp_micros(ts)"))
-        .withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("window.start").cast("timestamp_ntz").alias("window_start"),
-            "event_type",
-            "n_events",
+    with stream_run() as run:
+        raw = events_file_stream(spark, sf_dir, run)
+        stream = (
+            raw
+            # source-normalized µs → TIMESTAMP (watermarks need the
+            # tz-aware type; session tz is UTC so instants == wall clock)
+            .withColumn("ts", F.expr("timestamp_micros(ts)"))
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(
+                F.col("window.start").cast("timestamp_ntz").alias("window_start"),
+                "event_type",
+                "n_events",
+            )
         )
-    )
-    return run_to_memory(stream, qname, ckpt, "append")
+        return run_to_memory(stream, run, "append")
 
 
 @query(
@@ -188,10 +190,10 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Only the key columns are projected so the emitted set is
     deterministic regardless of which physical row arrived first.
     """
-    qname = f"dd_{uuid.uuid4().hex[:8]}"
-    raw, ckpt = events_file_stream(spark, sf_dir, qname)
-    stream = raw.select("user_id", "event_type").dropDuplicates(["user_id", "event_type"])
-    return run_to_memory(stream, qname, ckpt, "append")
+    with stream_run() as run:
+        raw = events_file_stream(spark, sf_dir, run)
+        stream = raw.select("user_id", "event_type").dropDuplicates(["user_id", "event_type"])
+        return run_to_memory(stream, run, "append")
 
 
 @query(
@@ -216,20 +218,20 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain SQL join. At scale the dim side broadcasts below the
     threshold exactly as in batch.
     """
-    qname = f"ssj_{uuid.uuid4().hex[:8]}"
-    raw, ckpt = events_file_stream(spark, sf_dir, qname)
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
-    stream = (
-        raw.join(cust, raw.user_id == cust.c_custkey)
-        .select(
-            "event_id",
-            "user_id",
-            "c_name",
-            "event_type",
-            (dec2("value") * dec2("c_acctbal")).cast("double").alias("weighted_value"),
+    with stream_run() as run:
+        raw = events_file_stream(spark, sf_dir, run)
+        cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
+        stream = (
+            raw.join(cust, raw.user_id == cust.c_custkey)
+            .select(
+                "event_id",
+                "user_id",
+                "c_name",
+                "event_type",
+                (dec2("value") * dec2("c_acctbal")).cast("double").alias("weighted_value"),
+            )
         )
-    )
-    return run_to_memory(stream, qname, ckpt, "append")
+        return run_to_memory(stream, run, "append")
 
 
 @query(
@@ -259,39 +261,39 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id into the same state-store partitioning — one exchange
     each, same as a batch shuffle join.
     """
-    qname = f"ssx_{uuid.uuid4().hex[:8]}"
-    raw, ckpt = events_file_stream(spark, sf_dir, qname)
-    ev = raw.withColumn("ts", F.expr("timestamp_micros(ts)"))
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id"),
-            F.col("ts").alias("view_ts"),
+    with stream_run() as run:
+        raw = events_file_stream(spark, sf_dir, run)
+        ev = raw.withColumn("ts", F.expr("timestamp_micros(ts)"))
+        views = (
+            ev.filter(F.col("event_type") == "view")
+            .select(
+                F.col("event_id").alias("view_id"),
+                F.col("user_id"),
+                F.col("ts").alias("view_ts"),
+            )
+            .withWatermark("view_ts", "10 minutes")
         )
-        .withWatermark("view_ts", "10 minutes")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
+        purchases = (
+            ev.filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("event_id").alias("purchase_id"),
+                F.col("user_id").alias("p_user_id"),
+                F.col("ts").alias("purchase_ts"),
+                F.col("value").alias("purchase_value"),
+            )
+            .withWatermark("purchase_ts", "10 minutes")
         )
-        .withWatermark("purchase_ts", "10 minutes")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 30 MINUTES")),
-    ).select(
-        "view_id",
-        "purchase_id",
-        "user_id",
-        F.col("view_ts").cast("timestamp_ntz").alias("view_ts"),
-        F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
-        "purchase_value",
-    )
-    return run_to_memory(joined, qname, ckpt, "append")
+        joined = views.join(
+            purchases,
+            (F.col("user_id") == F.col("p_user_id"))
+            & (F.col("purchase_ts") >= F.col("view_ts"))
+            & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 30 MINUTES")),
+        ).select(
+            "view_id",
+            "purchase_id",
+            "user_id",
+            F.col("view_ts").cast("timestamp_ntz").alias("view_ts"),
+            F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
+            "purchase_value",
+        )
+        return run_to_memory(joined, run, "append")

@@ -80,7 +80,7 @@ def test_incremental_agg_is_truly_incremental(spark, tmp_path):
     import os
 
     from parquet_to_hyper_app_spark.streaming.sinks import run_incremental_agg
-    from parquet_to_hyper_app_spark.streaming.source import RAW_EVENTS_SCHEMA
+    from parquet_to_hyper_app_spark.streaming.source import RAW_EVENTS_SCHEMA, stream_run
 
     ev = load_table(spark, SF_SMOKE, "events")
     src = str(tmp_path / "src")
@@ -100,7 +100,8 @@ def test_incremental_agg_is_truly_incremental(spark, tmp_path):
         .parquet(src)
     )
     out_dir = str(tmp_path / "snaps")
-    got = run_incremental_agg(spark, stream, str(tmp_path / "ckpt"), out_dir)
+    with stream_run() as run:
+        got = run_incremental_agg(spark, stream, run, out_dir)
     n_snaps = len(glob.glob(os.path.join(out_dir, "snap_*")))
     assert n_snaps >= 3, f"expected >=3 epochs, got {n_snaps}"
     from parquet_to_hyper_app_spark.functions.exact import dec2, exact_sum
@@ -155,7 +156,7 @@ def test_dedup_watermark_multibatch_stays_oracle_equivalent(spark, tmp_path):
     run_dedup_watermark contract; this harness orders files by event
     time exactly so that case cannot occur)."""
     from parquet_to_hyper_app_spark.streaming.sinks import run_dedup_watermark
-    from parquet_to_hyper_app_spark.streaming.source import RAW_EVENTS_SCHEMA
+    from parquet_to_hyper_app_spark.streaming.source import RAW_EVENTS_SCHEMA, stream_run
 
     ev = load_table(spark, SF_SMOKE, "events")
     src = str(tmp_path / "src")
@@ -180,10 +181,8 @@ def test_dedup_watermark_multibatch_stays_oracle_equivalent(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    import uuid
-
-    qname = f"ddw_test_{uuid.uuid4().hex[:8]}"
-    got = run_dedup_watermark(raw, qname, str(tmp_path / "ckpt"), ev)
+    with stream_run() as run:
+        got = run_dedup_watermark(raw, run, ev)
     rows = got.collect()
     keys = [(r.user_id, r.event_type) for r in rows]
     assert len(keys) == len(set(keys)), "duplicate keys leaked through the join"
@@ -201,14 +200,16 @@ def test_stream_ts_unit_matches_batch_catalog(spark):
     event timestamps in the SAME unit the batch catalog resolves to —
     streamed min/max(ts) (µs → timestamp) must equal batch min/max(ts)
     exactly, whatever physical unit the parquet file stores."""
-    from parquet_to_hyper_app_spark.streaming.source import events_file_stream, run_to_memory
+    from parquet_to_hyper_app_spark.streaming.source import (
+        events_file_stream,
+        run_to_memory,
+        stream_run,
+    )
 
-    import uuid
-
-    qname = f"ts_unit_{uuid.uuid4().hex[:8]}"  # fresh checkpoint per run
-    raw, ckpt = events_file_stream(spark, SF_SMOKE, qname)
-    stream = raw.select(F.expr("timestamp_micros(ts)").cast("timestamp_ntz").alias("ts"))
-    out = run_to_memory(stream, qname, ckpt, "append")
+    with stream_run() as run:
+        raw = events_file_stream(spark, SF_SMOKE, run)
+        stream = raw.select(F.expr("timestamp_micros(ts)").cast("timestamp_ntz").alias("ts"))
+        out = run_to_memory(stream, run, "append")
     s_min, s_max = out.agg(F.min("ts"), F.max("ts")).first()
     b_min, b_max = (
         load_table(spark, SF_SMOKE, "events").agg(F.min("ts"), F.max("ts")).first()
@@ -290,32 +291,62 @@ def test_dedup_watermark_runs_one_micro_batch(spark):
     assert spark.conf.get(conf) == before
 
 
-def test_stream_keys_leave_no_stream_dir(spark, tmp_path):
-    """Every streaming helper removes the engine-created per-query
-    directory (source symlink, checkpoint, state store) once its query
-    has terminated and the result no longer reads it; a caller-supplied
-    checkpoint location is never removed."""
+def _stream_root() -> str:
+    import os
+    import tempfile
+
+    root = os.path.join(tempfile.gettempdir(), "p2h_spark_stream")
+    os.makedirs(root, exist_ok=True)
+    return root
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_stream_keys_leave_no_stream_dir(spark):
+    """Every streaming run removes its directory (source symlink,
+    checkpoint, state store) once its query has terminated and the
+    result no longer reads it."""
     import os
 
     from parquet_to_hyper_app_spark.registry import load_all
-    from parquet_to_hyper_app_spark.streaming.source import discard_stream_dir, stream_dir
 
-    root = os.path.dirname(stream_dir("q"))
-    os.makedirs(root, exist_ok=True)
+    root = _stream_root()
     before = set(os.listdir(root))
     specs = load_all()
-    # run_to_memory, stream_foreach_batch, run_incremental_agg, and a
-    # corpus stream that builds its own source directory
+    # run_to_memory, stream_foreach_batch, run_incremental_agg, and the
+    # two documents streams
     for key in (
         "stream_dedup_watermark",
         "stream_foreach_batch",
         "stream_incremental_agg",
         "stream_quality_gate",
+        "stream_incremental_dedup",
     ):
         assert specs[key].fn(spark, SF_SMOKE).count() > 0, key
     assert set(os.listdir(root)) - before == set()
 
-    ckpt = tmp_path / "ckpt"
-    ckpt.mkdir()
-    discard_stream_dir(str(ckpt))
-    assert ckpt.is_dir()
+
+def test_failed_stream_query_leaves_no_run_dir_or_view(spark):
+    """A streaming query that raises inside its run still removes the
+    run directory and drops its memory-sink view."""
+    import os
+
+    import pytest
+
+    from parquet_to_hyper_app_spark.streaming.source import (
+        events_file_stream,
+        run_to_memory,
+        stream_run,
+    )
+
+    root = _stream_root()
+    dirs, views = set(os.listdir(root)), _temp_views(spark)
+    with pytest.raises(Exception, match="stream boom"):
+        with stream_run() as run:
+            raw = events_file_stream(spark, SF_SMOKE, run)
+            failing = raw.select(F.raise_error(F.lit("stream boom")).cast("string").alias("x"))
+            run_to_memory(failing, run, "append")
+    assert set(os.listdir(root)) - dirs == set()
+    assert _temp_views(spark) == views

@@ -18,8 +18,12 @@ the implementation's own description. Implementations live under
 """
 
 
-def main() -> int:
-    specs = load_all()
+#: the generated file, relative to the repo root
+OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs", "QUERIES.md")
+
+
+def render(specs: dict) -> str:
+    """The catalogue text for registry ``specs`` (`load_all()`)."""
     lines = [HEADER]
     n_oracle = sum(1 for s in specs.values() if s.oracle)
     lines.append(
@@ -31,10 +35,14 @@ def main() -> int:
         check = "oracle" if spec.oracle else "rows-only"
         doc = " ".join(spec.doc.split()) or "(no doc)"
         lines.append(f"\n### `{key}` — {check}\n\n{doc}\n")
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs", "QUERIES.md")
-    with open(out, "w") as f:
-        f.write("".join(lines))
-    print(f"wrote {out}: {len(specs)} queries")
+    return "".join(lines)
+
+
+def main() -> int:
+    specs = load_all()
+    with open(OUT, "w") as f:
+        f.write(render(specs))
+    print(f"wrote {OUT}: {len(specs)} queries")
     return 0
 
 
