@@ -18,12 +18,12 @@ external catalog table); `load_table` takes any path spark.read.parquet
 accepts, so nothing here assumes single-file inputs.
 
 Schema resolution: an inferring ``spark.read.parquet`` runs a footer
-job before the query starts. `read_parquet` remembers the schema Spark
-inferred for a local path, with the path's `filesig` signature and the
-session confs that steer inference, and reads with that schema while
-neither changed — so a long-lived driver re-running queries over
-unchanged tables pays no inference job. Remote schemes and paths that
-cannot be stat'ed infer on every read, as a bare read does.
+job before the query starts. `read_parquet` keeps the schema Spark
+inferred for a path in `filesig.memo`, beside the path's signature and
+the session confs that steer inference, and always reads with that
+schema — so a long-lived driver re-running queries over unchanged
+tables pays no inference job. Remote schemes and paths that cannot be
+stat'ed infer on every read.
 """
 
 from __future__ import annotations
@@ -32,10 +32,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from parquet_to_hyper_app_spark.session import ensure_session_configs
-from parquet_to_hyper_app_spark.sources.filesig import local_path, remember, signature
+from parquet_to_hyper_app_spark.sources.filesig import memo
 
 #: All driver-generated tables (TESTDATA.md / FIXTURES.md §A).
 TABLE_NAMES: tuple[str, ...] = (
@@ -57,7 +56,7 @@ EVENTS_TS_EXPR = "CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)"
 
 
 #: session confs that change what parquet schema inference returns; a
-#: cached schema is reused only under the values it was inferred with
+#: memoized schema is reused only under the values it was inferred with
 _SCHEMA_CONFS: tuple[str, ...] = (
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.binaryAsString",
@@ -68,28 +67,14 @@ _SCHEMA_CONFS: tuple[str, ...] = (
     "spark.sql.sources.partitionColumnTypeInference.enabled",
 )
 
-#: absolute local path → (file signature, _SCHEMA_CONFS values, inferred
-#: schema); one entry per path, cleared when full (see `filesig`)
-_SCHEMA_CACHE: dict[str, tuple[tuple, tuple, StructType]] = {}
-_SCHEMA_CACHE_MAX = 1024
-
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)``, minus the schema-inference job
     when ``path``'s data files and the inference confs are unchanged
     since the schema was last inferred for it."""
-    local = local_path(path)
-    sig = signature(local) if local is not None else None
-    if sig is None:
-        return spark.read.parquet(path)
-    key = os.path.abspath(local)
     confs = tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS)
-    hit = _SCHEMA_CACHE.get(key)
-    if hit is not None and hit[0] == sig and hit[1] == confs:
-        return spark.read.schema(hit[2]).parquet(path)
-    df = spark.read.parquet(path)
-    remember(_SCHEMA_CACHE, _SCHEMA_CACHE_MAX, key, (sig, confs, df.schema))
-    return df
+    schema = memo("schema", path, lambda: spark.read.parquet(path).schema, confs)
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -100,7 +85,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn("ts", F.expr(EVENTS_TS_EXPR))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    """Load several tables at once: ``lineitem, orders = load_tables(...)``."""
-    return tuple(load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES))

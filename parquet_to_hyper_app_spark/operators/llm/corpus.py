@@ -13,6 +13,8 @@ aggregation, the rollup is a plain grouped aggregate.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,6 +41,7 @@ from parquet_to_hyper_app_spark.operators.llm.text import (
     tokens,
 )
 from parquet_to_hyper_app_spark.registry import query
+from parquet_to_hyper_app_spark.session import persisted
 from parquet_to_hyper_app_spark.sources.scanwidth import scan_spread
 from parquet_to_hyper_app_spark.streaming.source import run_to_memory, stream_run, table_stream
 
@@ -142,34 +145,31 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             _ngram_hashes("__toks", _CONTAM_N).alias("grams"),
         )
-        .persist()
     )
-    bench = (
-        g.filter(F.col("doc_id") % _BENCH_MOD == 0)
-        .select(F.explode("grams").alias("gram"))
-        .distinct()
-    )
-    corpus = g.filter(F.col("doc_id") % _BENCH_MOD != 0)
-    hits = (
-        corpus.select("doc_id", F.explode("grams").alias("gram"))
-        .join(bench, "gram", "left_semi")
-        .select("doc_id")
-        .distinct()
-    )
-    out = (
-        corpus.join(hits.withColumn("__hit", F.lit(1)), "doc_id", "left")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count("__hit").alias("n_contaminated"),
-            (F.count("__hit").cast("double") / F.count(F.lit(1))).alias("contamination_rate"),
+    with persisted(g) as g:
+        bench = (
+            g.filter(F.col("doc_id") % _BENCH_MOD == 0)
+            .select(F.explode("grams").alias("gram"))
+            .distinct()
         )
-    )
-    # ≤ |sources| rows: materialize eagerly so the corpus-wide gram
-    # cache releases now (same lifecycle as verified_near_dup_pairs)
-    out = out.localCheckpoint(eager=True)
-    g.unpersist()
-    return out
+        corpus = g.filter(F.col("doc_id") % _BENCH_MOD != 0)
+        hits = (
+            corpus.select("doc_id", F.explode("grams").alias("gram"))
+            .join(bench, "gram", "left_semi")
+            .select("doc_id")
+            .distinct()
+        )
+        out = (
+            corpus.join(hits.withColumn("__hit", F.lit(1)), "doc_id", "left")
+            .groupBy("source")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.count("__hit").alias("n_contaminated"),
+                (F.count("__hit").cast("double") / F.count(F.lit(1))).alias("contamination_rate"),
+            )
+        )
+        # ≤ |sources| rows
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -833,10 +833,9 @@ def containment_frame(
     floor for executors smaller or larger than its 1e8-row calibration
     and is valid only with "auto".
 
-    materialize=False returns the lazy plan (no persist, no eager
-    checkpoint) for inspection; executing callers keep the default,
-    which checkpoints the small pair set so the corpus-wide gram cache
-    is released before returning."""
+    materialize=False returns the lazy plan (no eager checkpoint) for
+    inspection; executing callers keep the default, which checkpoints
+    the small pair set inside the `persisted` blocks."""
     # a floor passed alongside a non-"auto" df_cap would be silently
     # dead, and bool (an int subclass that would gate at Σdf² > 1.0),
     # negatives and NaN are config typos, not regimes
@@ -856,44 +855,38 @@ def containment_frame(
                 f"auto_cap_min_s2 must be None or a number >= 0,"
                 f" got {auto_cap_min_s2!r}"
             )
+    # bool is an int subclass: df_cap=True would silently run as cap=1;
+    # df_cap < 1 would route EVERY gram to the per-doc arrays — the
+    # array-carrying byte wall the hybrid exists to avoid — while still
+    # returning correct rows
+    if df_cap is not None and df_cap != "auto":
+        if isinstance(df_cap, bool) or not isinstance(df_cap, int):
+            raise ValueError(f"df_cap must be an int, None, or 'auto', got {df_cap!r}")
+        if df_cap < 1:
+            raise ValueError(f"df_cap must be >= 1, got {df_cap}")
     docs = scan_spread(load_table(spark, sf_dir, "documents"), "doc_id")
     n_parts = miner_partitions(docs)
-    # the canonical tokenize→bigram→distinct→hash frame, shared with
-    # ngram_jaccard_pairs. Persisted even where it is read once: without
-    # the cache boundary Catalyst pushes the explode's inferred
-    # size(hashes) > 0 filter below the scan_spread repartition, back
-    # into the one-task scan stage (the whole miner measured ~2.0 s
-    # without the persist vs ~1.0 s with it, sf0.01 on 4 cores)
-    grams = bigram_hash_frame(docs, persist=materialize)
-    cached_df_tab = None
-    try:
+    with ExitStack() as held:
+        # the canonical tokenize→bigram→distinct→hash frame, shared with
+        # ngram_jaccard_pairs. Persisted even where it is read once:
+        # without the cache boundary Catalyst pushes the explode's
+        # inferred size(hashes) > 0 filter below the scan_spread
+        # repartition, back into the one-task scan stage (the whole miner
+        # measured ~2.0 s without the persist vs ~1.0 s with it, sf0.01
+        # on 4 cores)
+        grams = held.enter_context(persisted(bigram_hash_frame(docs)))
         occ = grams.select("doc_id", "lang", "n", F.explode("hashes").alias("h"))
         if df_cap is not None:
-            df_tab = occ.groupBy("lang", "h").agg(F.count(F.lit(1)).alias("df"))
-            if isinstance(df_cap, str):
-                if df_cap != "auto":
-                    raise ValueError(
-                        f"df_cap must be an int, None, or 'auto', got {df_cap!r}"
-                    )
-                # the decision agg is a separate ACTION; the persist lets
-                # it and the capped form's ranking/verify joins share one
-                # df computation (measured ~2.5-3 s of ~10 s at the d20000
-                # Zipf point without it)
-                cached_df_tab = df_tab = df_tab.persist()
+            # read twice below (ranking and verify split); with "auto"
+            # the decision agg is a separate ACTION, and the persist
+            # lets it share one df computation with the capped form
+            # (measured ~2.5-3 s of ~10 s at the d20000 Zipf point
+            # without it)
+            df_tab = held.enter_context(
+                persisted(occ.groupBy("lang", "h").agg(F.count(F.lit(1)).alias("df")))
+            )
+            if df_cap == "auto":
                 df_cap = _auto_df_cap(df_tab, auto_cap_min_s2)
-            else:
-                # bool is an int subclass: df_cap=True would silently run
-                # as cap=1; df_cap < 1 would route EVERY gram to the per-doc
-                # arrays — the array-carrying byte wall the hybrid exists to
-                # avoid — while still returning correct rows
-                if isinstance(df_cap, bool) or not isinstance(df_cap, int):
-                    raise ValueError(
-                        f"df_cap must be an int, None, or 'auto', got {df_cap!r}"
-                    )
-                if df_cap < 1:
-                    raise ValueError(f"df_cap must be >= 1, got {df_cap}")
-                # read twice below (ranking and verify split)
-                cached_df_tab = df_tab = df_tab.persist()
         if df_cap is None:
             cooc = unordered_cooccurrence(occ, n_parts)
             common = F.col("common").cast("double")
@@ -923,14 +916,6 @@ def containment_frame(
         if not materialize:
             return out
         return out.localCheckpoint(eager=True)
-    finally:
-        # release the corpus-wide caches on every path: the eager
-        # checkpoint means success no longer needs them, and a failed
-        # decision agg / analysis error / main query must not pin
-        # executor storage for the session lifetime
-        grams.unpersist()
-        if cached_df_tab is not None:
-            cached_df_tab.unpersist()
 
 
 def _capped_containment(
@@ -1351,33 +1336,30 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = (
         docs.withColumn("__toks", tokens(F.lower(F.col("text"))))
         .select("doc_id", _ngram_hashes("__toks", _SPAN_N).alias("grams"))
-        .persist()
     )
-    e = g.select("doc_id", F.explode("grams").alias("gram"))
-    dup = e.groupBy("gram").agg(F.count(F.lit(1)).alias("c")).filter(F.col("c") > 1)
-    per_doc = (
-        e.join(dup.select("gram"), "gram", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("__n_dup"))
-    )
-    n_grams = F.size("grams")
-    n_dup = F.coalesce(F.col("__n_dup"), F.lit(0))
-    ratio = F.when(n_grams > 0, n_dup.cast("double") / n_grams)
-    out = (
-        g.join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            n_grams.cast("long").alias("n_grams"),
-            n_dup.cast("long").alias("n_dup_grams"),
-            ratio.alias("dup_gram_ratio"),
-            F.coalesce(ratio >= _SPAN_DUP_T, F.lit(False)).alias("flagged"),
+    with persisted(g) as g:
+        e = g.select("doc_id", F.explode("grams").alias("gram"))
+        dup = e.groupBy("gram").agg(F.count(F.lit(1)).alias("c")).filter(F.col("c") > 1)
+        per_doc = (
+            e.join(dup.select("gram"), "gram", "left_semi")
+            .groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("__n_dup"))
         )
-    )
-    # one row per doc: checkpoint eagerly so the gram cache releases
-    # now (same lifecycle as contamination_ngram)
-    out = out.localCheckpoint(eager=True)
-    g.unpersist()
-    return out
+        n_grams = F.size("grams")
+        n_dup = F.coalesce(F.col("__n_dup"), F.lit(0))
+        ratio = F.when(n_grams > 0, n_dup.cast("double") / n_grams)
+        out = (
+            g.join(per_doc, "doc_id", "left")
+            .select(
+                "doc_id",
+                n_grams.cast("long").alias("n_grams"),
+                n_dup.cast("long").alias("n_dup_grams"),
+                ratio.alias("dup_gram_ratio"),
+                F.coalesce(ratio >= _SPAN_DUP_T, F.lit(False)).alias("flagged"),
+            )
+        )
+        # one row per doc
+        return out.localCheckpoint(eager=True)
 
 
 #: winnowing parameters (Schleimer et al. 2003, public paper): k-token

@@ -44,6 +44,7 @@ from parquet_to_hyper_app_spark.operators.llm.similarity import (
 from parquet_to_hyper_app_spark.functions.crosshash import WS
 from parquet_to_hyper_app_spark.operators.llm.text import tokens
 from parquet_to_hyper_app_spark.registry import query
+from parquet_to_hyper_app_spark.session import persisted
 from parquet_to_hyper_app_spark.sources.scanwidth import scan_spread
 
 # ---------------------------------------------------------------------------
@@ -215,46 +216,37 @@ def verified_near_dup_pairs(
 ) -> DataFrame:
     """Candidate pairs whose exact shingle-Jaccard clears threshold.
 
-    Shingles+signatures are computed ONCE and persisted: the DAG
-    branches four ways (bucket self-join a/b, verify join a/b) and
-    would otherwise re-shingle the corpus each branch. The persisted
-    set is (doc_id, shingles, signature) — tiny next to the corpus, and
-    at cluster scale this is the dataset you'd checkpoint anyway.
+    Shingles+signatures are computed ONCE and persisted (`persisted`):
+    the DAG branches four ways (bucket self-join a/b, verify join a/b)
+    and would otherwise re-shingle the corpus each branch. The
+    persisted set is (doc_id, shingles, signature) — tiny next to the
+    corpus, and at cluster scale this is the dataset you'd checkpoint
+    anyway.
 
-    materialize=True (default) eagerly executes and truncates the plan
-    so the signature cache can be released immediately; pass False to
-    get the full lazy plan (plan inspection/tests).
+    materialize=True (default) eagerly checkpoints the (small) verified
+    pair set inside the block; pass False to get the full lazy plan
+    (plan inspection/tests).
     """
     sigged = _with_signature(_with_shingles(docs)).select(
         "doc_id", "shingles", "signature"
     )
-    if materialize:
-        # only the executing path persists: the lazy (plan-inspection)
-        # path returns before any unpersist could run and would pin a
-        # corpus-wide cache for the session's lifetime (review r5)
-        sigged = sigged.persist()
-    pairs = _candidates_from_signatures(sigged)
-    shingled = sigged.select("doc_id", "shingles")
-    a = shingled.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    b = shingled.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    verified = (
-        pairs.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("jaccard", inter.cast("double") / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    if not materialize:
-        return verified
-    # materialize the (small) verified pair set eagerly so the corpus-
-    # wide signature cache can be released immediately — otherwise each
-    # caller would leave a pinned copy in storage memory for the
-    # session's lifetime
-    verified = verified.localCheckpoint(eager=True)
-    sigged.unpersist()
-    return verified
+    with persisted(sigged) as sigged:
+        pairs = _candidates_from_signatures(sigged)
+        shingled = sigged.select("doc_id", "shingles")
+        a = shingled.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+        b = shingled.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
+        union = F.size(F.array_union("sh_a", "sh_b"))
+        verified = (
+            pairs.join(a, "doc_a")
+            .join(b, "doc_b")
+            .withColumn("jaccard", inter.cast("double") / union)
+            .filter(F.col("jaccard") >= threshold)
+            .select("doc_a", "doc_b", "jaccard")
+        )
+        if not materialize:
+            return verified
+        return verified.localCheckpoint(eager=True)
 
 
 def _minhash_oracle() -> str:
@@ -588,14 +580,13 @@ def unordered_cooccurrence(occ: DataFrame, n_parts: int) -> DataFrame:
     )
 
 
-def bigram_hash_frame(docs: DataFrame, persist: bool = True) -> DataFrame:
+def bigram_hash_frame(docs: DataFrame) -> DataFrame:
     """The canonical (doc_id, lang, hashes, n) frame — distinct word
     bigrams of each non-blank doc as int64 xxhash64 values — the Spark
     twin of BIGRAM_SIZED_CTES_TMPL, shared by `ngram_jaccard_pairs`
-    and corpus.containment_frame. Returned PERSISTED (callers read it
-    several times: df ranking, prefix rows, verify arrays); the caller
-    owns the unpersist(). persist=False is the lazy plan-inspection
-    form.
+    and corpus.containment_frame. Returned lazy; its callers read it
+    several times (df ranking, prefix rows, verify arrays) and hold it
+    in a `persisted` block.
 
     Narrow: the frame adds no exchange of its own, so it keeps the
     partitioning of ``docs``. A caller reading the table widens it
@@ -637,13 +628,12 @@ def bigram_hash_frame(docs: DataFrame, persist: bool = True) -> DataFrame:
             " i -> concat_ws(' ', get(__toks, i-1), coalesce(get(__toks, i), ''))))"
         ).alias("bigrams"),
     )
-    out = (
+    return (
         grams.withColumn("bigrams", F.filter(F.col("bigrams"), lambda b: b != ""))
         .withColumn("hashes", F.transform("bigrams", lambda g: F.xxhash64(g)))
         .drop("bigrams")
         .withColumn("n", F.size("hashes"))
     )
-    return out.persist() if persist else out
 
 
 def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
@@ -657,135 +647,130 @@ def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     the scan; the pair shuffles run at `miner_partitions` (the session
     width)."""
     n_parts = miner_partitions(docs)
-    grams = bigram_hash_frame(docs)
-    # global total order per lang: (document frequency asc, hash) —
-    # prefixes fill with the RAREST bigrams first
-    occ = grams.select("doc_id", "lang", "n", F.explode("hashes").alias("h"))
-    # df as a COUNT WINDOW over (lang, h) instead of the r4-r15
-    # groupBy + join-back (identical values: count over the whole
-    # partition frame = the group count). The agg+join form cost one
-    # exchange of the partially-agged occ to build df_tab PLUS the join
-    # to re-attach it (broadcast locally; at scale an SMJ that shuffles
-    # occ by (lang, h) AND df_tab again) — the window form establishes
-    # the (lang, h) clustering ONCE and reads df off it (guide §2.4:
-    # operations keyed the same way share one exchange). Interleaved
-    # A/B r16 (6 batches, controls riding at 1.08-1.12 ADVERSE):
-    # jaccard 0.92 min / 0.75 med, containment 0.92 / 0.79 — both
-    # clear the control band by >=0.15 relative.
-    w_gram = W.partitionBy("lang", "h")
-    # J >= 0.5 ⇒ the smallest common bigram lies within the first
-    # n - ceil(n/2) + 1 = floor(n/2) + 1 ranked bigrams of BOTH docs.
-    # Rank with a per-doc window + filter instead of the r4
-    # collect_list(sort_array) + slice + posexplode: the window sorts
-    # the same (doc_id)-clustered rows but emits prefix ROWS directly —
-    # no full per-doc array materialization for elements the slice
-    # would drop, one shuffle either way.
-    w_doc = W.partitionBy("doc_id").orderBy("df", "h")
-    pref = (
-        occ.withColumn("df", F.count(F.lit(1)).over(w_gram))
-        .withColumn("pos", F.row_number().over(w_doc) - 1)
-        .filter(
-            F.col("pos")
-            < (F.col("n") - F.ceil(F.col("n") * F.lit(0.5)) + 1).cast("int")
+    with persisted(bigram_hash_frame(docs)) as grams:
+        # global total order per lang: (document frequency asc, hash) —
+        # prefixes fill with the RAREST bigrams first
+        occ = grams.select("doc_id", "lang", "n", F.explode("hashes").alias("h"))
+        # df as a COUNT WINDOW over (lang, h) instead of the r4-r15
+        # groupBy + join-back (identical values: count over the whole
+        # partition frame = the group count). The agg+join form cost one
+        # exchange of the partially-agged occ to build df_tab PLUS the join
+        # to re-attach it (broadcast locally; at scale an SMJ that shuffles
+        # occ by (lang, h) AND df_tab again) — the window form establishes
+        # the (lang, h) clustering ONCE and reads df off it (guide §2.4:
+        # operations keyed the same way share one exchange). Interleaved
+        # A/B r16 (6 batches, controls riding at 1.08-1.12 ADVERSE):
+        # jaccard 0.92 min / 0.75 med, containment 0.92 / 0.79 — both
+        # clear the control band by >=0.15 relative.
+        w_gram = W.partitionBy("lang", "h")
+        # J >= 0.5 ⇒ the smallest common bigram lies within the first
+        # n - ceil(n/2) + 1 = floor(n/2) + 1 ranked bigrams of BOTH docs.
+        # Rank with a per-doc window + filter instead of the r4
+        # collect_list(sort_array) + slice + posexplode: the window sorts
+        # the same (doc_id)-clustered rows but emits prefix ROWS directly —
+        # no full per-doc array materialization for elements the slice
+        # would drop, one shuffle either way.
+        w_doc = W.partitionBy("doc_id").orderBy("df", "h")
+        pref = (
+            occ.withColumn("df", F.count(F.lit(1)).over(w_gram))
+            .withColumn("pos", F.row_number().over(w_doc) - 1)
+            .filter(
+                F.col("pos")
+                < (F.col("n") - F.ceil(F.col("n") * F.lit(0.5)) + 1).cast("int")
+            )
+            .select("doc_id", "lang", "n", "pos", F.col("h").alias("ph"))
         )
-        .select("doc_id", "lang", "n", "pos", F.col("h").alias("ph"))
-    )
-    # ASYMMETRIC probe/index join (PPJoin proper, r5): order every pair
-    # by (n, doc_id); the SMALLER doc joins from its mid-prefix only,
-    # the larger from its full half-prefix. Lossless for the pair
-    # because its SMALLEST common bigram w survives both sides (any
-    # other shared prefix element may be filtered; w alone emits the
-    # pair). With α = ceil((n_a+n_b)/3) the required overlap
-    # (J ≥ t ⟺ |∩| ≥ t/(1+t)·|∪| ⟹ |∩| ≥ α at t = 0.5):
-    # - smaller doc a (n_a ≤ n_b): rank_a(w) ≤ n_a − α + 1 ≤
-    #   n_a − ceil(2·n_a/3) + 1 ≈ n_a/3 + 1 — the mid-prefix;
-    # - larger doc b: the size-ratio residual (J ≥ 0.5 forces
-    #   n_b ≤ 2·n_a) gives |∩| ≥ (n_a+n_b)/3 ≥ n_b/2, so rank_b(w) ≤
-    #   floor(n_b/2) + 1 — exactly the emitted half-prefix.
-    # Versus r4 (both sides full half-prefix, mid-prefix as a
-    # POST-join filter) the a-side join input shrinks by ~a third and
-    # per-token pair volume drops from df²/2 to ~df_mid·df_full/2 —
-    # the prune now cuts rows BEFORE the join materializes them, which
-    # is what the x8 scale curve tracks. Same filters, earlier stage;
-    # the exhaustive-join oracle still proves losslessness by hash.
-    pa = pref.filter(
-        F.col("pos") + 1 <= F.col("n") - F.expr("(2*n + 2) div 3") + 1
-    ).select(
-        F.col("doc_id").alias("id_a"),
-        "lang",
-        F.col("n").alias("n_a"),
-        "ph",
-        (F.col("pos") + 1).alias("ra"),
-    )
-    pb = pref.select(
-        F.col("doc_id").alias("id_b"),
-        "lang",
-        F.col("n").alias("n_b"),
-        "ph",
-        (F.col("pos") + 1).alias("rb"),
-    )
-    na, nb, ra, rb = F.col("n_a"), F.col("n_b"), F.col("ra"), F.col("rb")
-    cand = (
-        pa.join(pb, ["lang", "ph"])
-        # pair orientation: a is the (n, doc_id)-smaller doc — each
-        # unordered pair is generated exactly once, in one orientation
-        .filter(
-            (na < nb) | ((na == nb) & (F.col("id_a") < F.col("id_b")))
+        # ASYMMETRIC probe/index join (PPJoin proper, r5): order every pair
+        # by (n, doc_id); the SMALLER doc joins from its mid-prefix only,
+        # the larger from its full half-prefix. Lossless for the pair
+        # because its SMALLEST common bigram w survives both sides (any
+        # other shared prefix element may be filtered; w alone emits the
+        # pair). With α = ceil((n_a+n_b)/3) the required overlap
+        # (J ≥ t ⟺ |∩| ≥ t/(1+t)·|∪| ⟹ |∩| ≥ α at t = 0.5):
+        # - smaller doc a (n_a ≤ n_b): rank_a(w) ≤ n_a − α + 1 ≤
+        #   n_a − ceil(2·n_a/3) + 1 ≈ n_a/3 + 1 — the mid-prefix;
+        # - larger doc b: the size-ratio residual (J ≥ 0.5 forces
+        #   n_b ≤ 2·n_a) gives |∩| ≥ (n_a+n_b)/3 ≥ n_b/2, so rank_b(w) ≤
+        #   floor(n_b/2) + 1 — exactly the emitted half-prefix.
+        # Versus r4 (both sides full half-prefix, mid-prefix as a
+        # POST-join filter) the a-side join input shrinks by ~a third and
+        # per-token pair volume drops from df²/2 to ~df_mid·df_full/2 —
+        # the prune now cuts rows BEFORE the join materializes them, which
+        # is what the x8 scale curve tracks. Same filters, earlier stage;
+        # the exhaustive-join oracle still proves losslessness by hash.
+        pa = pref.filter(
+            F.col("pos") + 1 <= F.col("n") - F.expr("(2*n + 2) div 3") + 1
+        ).select(
+            F.col("doc_id").alias("id_a"),
+            "lang",
+            F.col("n").alias("n_a"),
+            "ph",
+            (F.col("pos") + 1).alias("ra"),
         )
-        # size-ratio residual: J >= 0.5 forces n_b <= 2·n_a (n_a <= n_b
-        # already holds by orientation)
-        .filter(nb <= 2 * na)
-        # positional prune: an element at rank r can witness the
-        # overlap only if 1 + min(n_a − r_a, n_b − r_b) ≥ α (what
-        # remains after the joined element bounds |∩| from above)
-        .filter(1 + F.least(na - ra, nb - rb) >= F.expr("(n_a + n_b + 2) div 3"))
-        # normalize back to the id_a < id_b output contract (the
-        # orientation above ordered by size, not id)
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
+        pb = pref.select(
+            F.col("doc_id").alias("id_b"),
+            "lang",
+            F.col("n").alias("n_b"),
+            "ph",
+            (F.col("pos") + 1).alias("rb"),
         )
-    )
-    # pair dedup at a PINNED partition width, not `.distinct()`: the
-    # candidate set is small in bytes (two longs/row) but the verify
-    # stage downstream is CPU-bound (array_intersect per pair), and
-    # AQE's size-based coalescing — blind to downstream compute —
-    # squeezed the post-distinct stage to ~6 partitions at sf0.1,
-    # serializing 87M intersect ops on 6 of 32 cores (4.0 s → 2.4 s
-    # measured). repartition(P, keys) + dropDuplicates() is still ONE
-    # exchange (the explicit hash partitioning satisfies the dedup
-    # aggregate's distribution requirement), and a user-specified
-    # partition count is exempt from AQE coalescing, so the verify
-    # inherits full width — the session width (`miner_partitions`).
-    cand = cand.repartition(n_parts, "id_a", "id_b").dropDuplicates()
-    # array verify, KEPT over the r9 co-occurrence count by
-    # measurement (see the dedup_ngram_jaccard docstring): this
-    # miner's candidate set is small enough that per-pair arrays beat
-    # the global count stream at every probed scale.
-    va = grams.select(
-        F.col("doc_id").alias("id_a"), F.col("hashes").alias("h_a"), F.col("n").alias("n_a")
-    )
-    vb = grams.select(
-        F.col("doc_id").alias("id_b"), F.col("hashes").alias("h_b"), F.col("n").alias("n_b")
-    )
-    inter = F.size(F.array_intersect("h_a", "h_b"))
-    # |A ∪ B| = |A| + |B| − |A ∩ B| — array_union per pair not needed
-    jac = inter.cast("double") / (F.col("n_a") + F.col("n_b") - inter)
-    out = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.5)
-        .select(
-            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "jaccard"
+        na, nb, ra, rb = F.col("n_a"), F.col("n_b"), F.col("ra"), F.col("rb")
+        cand = (
+            pa.join(pb, ["lang", "ph"])
+            # pair orientation: a is the (n, doc_id)-smaller doc — each
+            # unordered pair is generated exactly once, in one orientation
+            .filter(
+                (na < nb) | ((na == nb) & (F.col("id_a") < F.col("id_b")))
+            )
+            # size-ratio residual: J >= 0.5 forces n_b <= 2·n_a (n_a <= n_b
+            # already holds by orientation)
+            .filter(nb <= 2 * na)
+            # positional prune: an element at rank r can witness the
+            # overlap only if 1 + min(n_a − r_a, n_b − r_b) ≥ α (what
+            # remains after the joined element bounds |∩| from above)
+            .filter(1 + F.least(na - ra, nb - rb) >= F.expr("(n_a + n_b + 2) div 3"))
+            # normalize back to the id_a < id_b output contract (the
+            # orientation above ordered by size, not id)
+            .select(
+                F.least("id_a", "id_b").alias("id_a"),
+                F.greatest("id_a", "id_b").alias("id_b"),
+            )
         )
-    )
-    # the (small) pair set materializes eagerly so the corpus-wide
-    # hash-array cache releases now, not at session end (same pattern
-    # as verified_near_dup_pairs)
-    out = out.localCheckpoint(eager=True)
-    grams.unpersist()
-    return out
+        # pair dedup at a PINNED partition width, not `.distinct()`: the
+        # candidate set is small in bytes (two longs/row) but the verify
+        # stage downstream is CPU-bound (array_intersect per pair), and
+        # AQE's size-based coalescing — blind to downstream compute —
+        # squeezed the post-distinct stage to ~6 partitions at sf0.1,
+        # serializing 87M intersect ops on 6 of 32 cores (4.0 s → 2.4 s
+        # measured). repartition(P, keys) + dropDuplicates() is still ONE
+        # exchange (the explicit hash partitioning satisfies the dedup
+        # aggregate's distribution requirement), and a user-specified
+        # partition count is exempt from AQE coalescing, so the verify
+        # inherits full width — the session width (`miner_partitions`).
+        cand = cand.repartition(n_parts, "id_a", "id_b").dropDuplicates()
+        # array verify, KEPT over the r9 co-occurrence count by
+        # measurement (see the dedup_ngram_jaccard docstring): this
+        # miner's candidate set is small enough that per-pair arrays beat
+        # the global count stream at every probed scale.
+        va = grams.select(
+            F.col("doc_id").alias("id_a"), F.col("hashes").alias("h_a"), F.col("n").alias("n_a")
+        )
+        vb = grams.select(
+            F.col("doc_id").alias("id_b"), F.col("hashes").alias("h_b"), F.col("n").alias("n_b")
+        )
+        inter = F.size(F.array_intersect("h_a", "h_b"))
+        # |A ∪ B| = |A| + |B| − |A ∩ B| — array_union per pair not needed
+        jac = inter.cast("double") / (F.col("n_a") + F.col("n_b") - inter)
+        out = (
+            cand.join(va, "id_a")
+            .join(vb, "id_b")
+            .withColumn("jaccard", jac)
+            .filter(F.col("jaccard") >= 0.5)
+            .select(
+                F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "jaccard"
+            )
+        )
+        return out.localCheckpoint(eager=True)
 
 
 def connected_components(pairs: DataFrame, nodes: DataFrame, max_iters: int = 10) -> DataFrame:
@@ -822,17 +807,13 @@ def connected_components(pairs: DataFrame, nodes: DataFrame, max_iters: int = 10
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .distinct()
-        .persist()
     )
     # both endpoints of every edge: edges is already symmetrized, so
     # the src column alone covers V(edges)
-    labels = (
-        edges.select("src").distinct()
-        .select(F.col("src").alias("doc_id"), F.col("src").alias("cluster_id"))
-        .persist()
+    seeds = edges.select("src").distinct().select(
+        F.col("src").alias("doc_id"), F.col("src").alias("cluster_id")
     )
-    converged = False
-    try:
+    with persisted(edges, seeds) as (edges, labels):
         for _ in range(max_iters):
             neighbor_min = (
                 edges.join(labels, edges.dst == labels.doc_id)
@@ -844,8 +825,7 @@ def connected_components(pairs: DataFrame, nodes: DataFrame, max_iters: int = 10
             # the step result from cache instead of recomputing the
             # neighbor-min join+agg twice; the r15 form paid a separate
             # eager checkpoint JOB here, measured ~0.3 s/call slower at
-            # sf0.1 in either direction (double-compute probe,
-            # /tmp/probe_cc.py)
+            # sf0.1 in either direction
             stepped = labels.join(
                 neighbor_min, labels.doc_id == neighbor_min.src, "left"
             ).select(
@@ -854,39 +834,37 @@ def connected_components(pairs: DataFrame, nodes: DataFrame, max_iters: int = 10
                 F.least(
                     F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
                 ).alias("cluster_id"),
-            ).persist()
-            # pointer jump: l(x) <- min(l(x), l(l(x)))
-            lab2 = stepped.select(
-                F.col("doc_id").alias("lid"), F.col("cluster_id").alias("lcid")
             )
-            # localCheckpoint truncates lineage each round: without it,
-            # iteration i re-executes all prior rounds (O(k²) work) and
-            # the nested plan keeps growing
-            new_labels = (
-                stepped.join(lab2, stepped.cluster_id == lab2.lid, "left")
-                .select(
-                    "doc_id",
-                    F.least(
-                        F.col("cluster_id"), F.coalesce(F.col("lcid"), F.col("cluster_id"))
-                    ).alias("cluster_id"),
-                    (
-                        F.least(
-                            F.col("cluster_id"),
-                            F.coalesce(F.col("lcid"), F.col("cluster_id")),
-                        )
-                        != F.col("__old")
-                    ).alias("__chg"),
+            with persisted(stepped) as stepped:
+                # pointer jump: l(x) <- min(l(x), l(l(x)))
+                lab2 = stepped.select(
+                    F.col("doc_id").alias("lid"), F.col("cluster_id").alias("lcid")
                 )
-                .localCheckpoint(eager=True)
-            )
+                # localCheckpoint truncates lineage each round: without
+                # it, iteration i re-executes all prior rounds (O(k²)
+                # work) and the nested plan keeps growing
+                new_labels = (
+                    stepped.join(lab2, stepped.cluster_id == lab2.lid, "left")
+                    .select(
+                        "doc_id",
+                        F.least(
+                            F.col("cluster_id"), F.coalesce(F.col("lcid"), F.col("cluster_id"))
+                        ).alias("cluster_id"),
+                        (
+                            F.least(
+                                F.col("cluster_id"),
+                                F.coalesce(F.col("lcid"), F.col("cluster_id")),
+                            )
+                            != F.col("__old")
+                        ).alias("__chg"),
+                    )
+                    .localCheckpoint(eager=True)
+                )
             changed = new_labels.filter(F.col("__chg")).limit(1).count()
-            stepped.unpersist()
-            labels.unpersist()
             labels = new_labels.drop("__chg")
             if changed == 0:
-                converged = True
                 break
-        if not converged:
+        else:
             # returning partial labels would silently violate the
             # "cluster_id = component minimum" invariant for chains
             # deeper than max_iters
@@ -894,15 +872,13 @@ def connected_components(pairs: DataFrame, nodes: DataFrame, max_iters: int = 10
                 f"connected_components did not converge in {max_iters} "
                 "iterations; raise max_iters (component diameter exceeds it)"
             )
-        # untouched nodes (no incident edge) self-label — exactly what
-        # iterating them would have produced, without k rounds of
-        # full-corpus shuffles
-        return nodes.select("doc_id").join(labels, "doc_id", "left").select(
-            "doc_id",
-            F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
-        )
-    finally:
-        edges.unpersist()
+    # untouched nodes (no incident edge) self-label — exactly what
+    # iterating them would have produced, without k rounds of
+    # full-corpus shuffles
+    return nodes.select("doc_id").join(labels, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
+    )
 
 
 @query(

@@ -37,6 +37,7 @@ from parquet_to_hyper_app_spark.operators.llm.similarity import (
 )
 from parquet_to_hyper_app_spark.functions.crosshash import WS
 from parquet_to_hyper_app_spark.registry import query
+from parquet_to_hyper_app_spark.session import persisted
 from parquet_to_hyper_app_spark.sources.scanwidth import scan_spread
 
 
@@ -405,22 +406,17 @@ def _distributed_train(v, k: int) -> list[list[float]]:
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    feats = v.select(array_to_vector(F.col("e")).alias("features"))
     # persisted across the TWO passes this function makes (the clamp
     # count and k-means||'s iterations) — without it each would re-run
     # the scan + uniform filter + vector conversion, the same
-    # double-read shape the containment df_tab persist closes; released
-    # in finally because fit() can throw
-    feats = feats.persist()
-    try:
+    # double-read shape the containment df_tab persist closes
+    with persisted(v.select(array_to_vector(F.col("e")).alias("features"))) as feats:
         n = feats.count()
         if n == 0:
             return []
         k = min(k, n)
         model = KMeans(k=k, seed=0, maxIter=_KM_DIST_ITERS).fit(feats)
         return [[float(x) for x in c] for c in model.clusterCenters()]
-    finally:
-        feats.unpersist()
 
 
 def _assign_ids_np(mats, cents: list[list[float]]):

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from parquet_to_hyper_app_spark.catalog import load_table
 from parquet_to_hyper_app_spark.functions.crosshash import HASH60_DUCK, rademacher_entry
 from parquet_to_hyper_app_spark.registry import query
-from parquet_to_hyper_app_spark.sources.filesig import local_path, remember, signature
+from parquet_to_hyper_app_spark.sources.filesig import memo
 from parquet_to_hyper_app_spark.sources.scanwidth import scan_spread
 
 _N_QUERIES = 10
@@ -192,33 +192,17 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
-#: resolved embeddings path → (file signature, dim / row count); the
-#: lookups are one tiny job each but every LSH/IVF query would
-#: otherwise re-run them per invocation. A rewrite of the table in
-#: place replaces the path's entry (see `filesig`), so a new
-#: dimensionality is never filtered against a stale one. _DIM_CACHE
-#: stores None too — the degenerate no-well-defined-vector answer
-#: costs the same max-agg scan as a real dim.
-_DIM_CACHE: dict[str, tuple[tuple, int | None]] = {}
-_COUNT_CACHE: dict[str, tuple[tuple, int]] = {}
-_EMB_CACHE_MAX = 1024
-
-
-def _embeddings_stat(spark: SparkSession, sf_dir: str, cache: dict, compute):
-    """``compute(embeddings)``, cached per resolved table path while the
-    table's files are unchanged; a path that cannot be stat'ed (remote
-    scheme, missing file) is computed on every call."""
-    local = local_path(os.path.join(sf_dir, "embeddings.parquet"))
-    sig = signature(local) if local is not None else None
-    if sig is None:
-        return compute(load_table(spark, sf_dir, "embeddings"))
-    key = os.path.abspath(local)
-    hit = cache.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
-    value = compute(load_table(spark, sf_dir, "embeddings"))
-    remember(cache, _EMB_CACHE_MAX, key, (sig, value))
-    return value
+def _embeddings_stat(spark: SparkSession, sf_dir: str, kind: str, compute):
+    """``compute(embeddings)``, memoized per version of the table's
+    files (`filesig.memo`): the lookups are one tiny job each, and
+    every LSH/IVF query would otherwise re-run them per invocation. A
+    rewrite of the table in place is computed again, so a new
+    dimensionality is never filtered against a stale one."""
+    return memo(
+        kind,
+        os.path.join(sf_dir, "embeddings.parquet"),
+        lambda: compute(load_table(spark, sf_dir, "embeddings")),
+    )
 
 
 def corpus_dim_for(spark: SparkSession, sf_dir: str) -> int | None:
@@ -228,7 +212,7 @@ def corpus_dim_for(spark: SparkSession, sf_dir: str) -> int | None:
     100 TB that column IS the table, so an uncached lookup would
     double every search's scan cost). None (table has no well-defined
     vector) is cached like any other answer."""
-    return _embeddings_stat(spark, sf_dir, _DIM_CACHE, corpus_dim)
+    return _embeddings_stat(spark, sf_dir, "embeddings_dim", corpus_dim)
 
 
 def embedding_dim_for(spark: SparkSession, sf_dir: str) -> int:
@@ -259,7 +243,7 @@ def uniform_vectors_for(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def embedding_count_for(spark: SparkSession, sf_dir: str) -> int:
     """Cached row count of the embeddings table (sizes LSH tables)."""
-    return _embeddings_stat(spark, sf_dir, _COUNT_CACHE, DataFrame.count)
+    return _embeddings_stat(spark, sf_dir, "embeddings_count", DataFrame.count)
 
 
 def bucket_topk(cand: DataFrame, q: DataFrame, bucket_col: str, k: int = _TOP_K) -> DataFrame:

@@ -14,6 +14,7 @@ from parquet_to_hyper_app_spark.catalog import load_table
 from parquet_to_hyper_app_spark.sources.scanwidth import scan_spread
 from parquet_to_hyper_app_spark.functions.crosshash import WS, WS_CHARS
 from parquet_to_hyper_app_spark.registry import query
+from parquet_to_hyper_app_spark.session import persisted
 
 
 def tokens(text: Column) -> Column:
@@ -460,52 +461,50 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
     )
-    cum = _global_rank_cumsum(occ).select("r", "cum_n").persist()
-    bounds = cum.agg(
-        F.max("r").alias("max_r"), F.max("cum_n").alias("total")
-    )
-    sizes = F.array(*[F.lit(s) for s in _COVERAGE_VOCAB_SIZES])
-    size_df = (
-        spark.range(1)
-        .select(F.explode(sizes).alias("vocab_size"))
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            "vocab_size",
-            F.least(F.col("vocab_size"), F.col("max_r")).alias("r"),
-            "total",
+    cum = _global_rank_cumsum(occ).select("r", "cum_n")
+    # occ is persisted first, so cum's cache is filled from occ's
+    with persisted(occ, cum) as (occ, cum):
+        bounds = cum.agg(
+            F.max("r").alias("max_r"), F.max("cum_n").alias("total")
         )
-    )
-    # LEFT join from the 3-row size frame, not inner from cum: on an
-    # all-empty corpus (every doc NULL/whitespace — the fuzz plants
-    # these) cum is empty and an inner join emits 0 rows while the
-    # oracle's LEFT JOIN still emits one row per vocab size. Pruning
-    # cum to r <= max(sizes) first bounds the broadcast build side to
-    # max(sizes) rows regardless of vocabulary cardinality, and drops
-    # the full-vocab shuffle the old inner join paid.
-    cum_head = cum.filter(F.col("r") <= max(_COVERAGE_VOCAB_SIZES))
-    out = (
-        size_df.join(F.broadcast(cum_head), "r", "left")
-        .select(
-            "vocab_size",
-            # unmatched (empty-corpus) rows keep r = vocab_size because
-            # least() skips the NULL max_r — gate n_types on the join
-            # actually matching (cum_n is never NULL for a real rank)
-            F.when(F.col("cum_n").isNull(), F.lit(0))
-            .otherwise(F.col("r"))
-            .cast("long")
-            .alias("n_types"),
-            F.coalesce(F.col("cum_n"), F.lit(0)).alias("n_occurrences"),
-            F.round(
-                F.coalesce(F.col("cum_n"), F.lit(0)).cast("double") / F.col("total"), 6
-            ).alias("coverage"),
+        sizes = F.array(*[F.lit(s) for s in _COVERAGE_VOCAB_SIZES])
+        size_df = (
+            spark.range(1)
+            .select(F.explode(sizes).alias("vocab_size"))
+            .crossJoin(F.broadcast(bounds))
+            .select(
+                "vocab_size",
+                F.least(F.col("vocab_size"), F.col("max_r")).alias("r"),
+                "total",
+            )
         )
-        .localCheckpoint(eager=True)
-    )
-    cum.unpersist()
-    occ.unpersist()
-    return out
+        # LEFT join from the 3-row size frame, not inner from cum: on an
+        # all-empty corpus (every doc NULL/whitespace — the fuzz plants
+        # these) cum is empty and an inner join emits 0 rows while the
+        # oracle's LEFT JOIN still emits one row per vocab size. Pruning
+        # cum to r <= max(sizes) first bounds the broadcast build side to
+        # max(sizes) rows regardless of vocabulary cardinality, and drops
+        # the full-vocab shuffle the old inner join paid.
+        cum_head = cum.filter(F.col("r") <= max(_COVERAGE_VOCAB_SIZES))
+        return (
+            size_df.join(F.broadcast(cum_head), "r", "left")
+            .select(
+                "vocab_size",
+                # unmatched (empty-corpus) rows keep r = vocab_size because
+                # least() skips the NULL max_r — gate n_types on the join
+                # actually matching (cum_n is never NULL for a real rank)
+                F.when(F.col("cum_n").isNull(), F.lit(0))
+                .otherwise(F.col("r"))
+                .cast("long")
+                .alias("n_types"),
+                F.coalesce(F.col("cum_n"), F.lit(0)).alias("n_occurrences"),
+                F.round(
+                    F.coalesce(F.col("cum_n"), F.lit(0)).cast("double") / F.col("total"), 6
+                ).alias("coverage"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 @query(

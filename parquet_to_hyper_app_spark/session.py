@@ -14,8 +14,9 @@ session owner except in `build_session`, where it is sized to cores.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: confs already warned about (warn once per process, not per query)
 _WARNED_CONFS: set[str] = set()
@@ -68,6 +69,29 @@ def ensure_session_configs(spark: SparkSession) -> SparkSession:
                     stacklevel=2,
                 )
     return spark
+
+
+@contextmanager
+def persisted(*frames: DataFrame):
+    """Persist ``frames`` for the block and unpersist them on exit, also
+    when the block raises; yields the persisted frame (one argument) or
+    a tuple of them.
+
+    Every cached intermediate of the engine goes through here. A block
+    that returns a small result detaches it from the cache first
+    (``localCheckpoint(eager=True)`` inside the block), so the
+    corpus-wide frame is released when the query returns, fails or is
+    cancelled, never at session end. A lazy frame returned from the
+    block looks up cached data when it is planned, after the exit, so
+    its plan is the uncached one."""
+    held: list[DataFrame] = []
+    try:
+        for df in frames:
+            held.append(df.persist())
+        yield held[0] if len(held) == 1 else tuple(held)
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 def build_session(

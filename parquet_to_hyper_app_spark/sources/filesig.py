@@ -10,18 +10,24 @@ to or removed from a directory changes the set. Not detected: a rewrite
 in place that keeps the inode and the size and lands within the
 filesystem's timestamp granularity of the previous write.
 
-Each cache holds ONE entry per path, storing the signature beside the
-value, so a rewrite replaces the entry instead of adding one; and each
-is cleared when it reaches its bound, so a long-lived driver reading
-ever new (uuid-named) paths cannot grow it without limit.
+Every such value lives in one cache, `memo`: ONE entry per (kind,
+path), storing the signature beside the value, so a rewrite replaces
+the entry instead of adding one; the cache is cleared when it reaches
+its bound, so a long-lived driver reading ever new (uuid-named) paths
+cannot grow it without limit.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Any
+from typing import Any, Callable, TypeVar
 
 Signature = tuple[tuple[int, int, int], ...]
+T = TypeVar("T")
+
+#: (kind, absolute path) → (signature, extra, value)
+_MEMO: dict[tuple[str, str], tuple[Signature, tuple, Any]] = {}
+_MEMO_MAX = 8192
 
 
 def local_path(uri: str) -> str | None:
@@ -62,10 +68,24 @@ def signature(path: str) -> Signature | None:
     return tuple(sorted(sig))
 
 
-def remember(cache: dict[str, Any], bound: int, key: str, value: Any) -> None:
-    """``cache[key] = value``, clearing the cache first when a new key
-    would take it past ``bound`` (blunt but bounded: a refill costs one
-    recomputation per path)."""
-    if key not in cache and len(cache) >= bound:
-        cache.clear()
-    cache[key] = value
+def memo(kind: str, path: str, compute: Callable[[], T], extra: tuple = ()) -> T:
+    """``compute()``, derived from the files at ``path``: cached under
+    ``(kind, path)`` while their signature and ``extra`` (any other
+    input the value depends on, e.g. session confs) are unchanged. A
+    remote path, or one that cannot be stat'ed, is computed on every
+    call; a ``compute`` that raises stores nothing. Cleared when a new
+    entry would take the cache past its bound (blunt but bounded: a
+    refill costs one recomputation per path)."""
+    local = local_path(path)
+    sig = signature(local) if local is not None else None
+    if sig is None:
+        return compute()
+    key = (kind, os.path.abspath(local))
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0] == sig and hit[1] == extra:
+        return hit[2]
+    value = compute()
+    if key not in _MEMO and len(_MEMO) >= _MEMO_MAX:
+        _MEMO.clear()
+    _MEMO[key] = (sig, extra, value)
+    return value

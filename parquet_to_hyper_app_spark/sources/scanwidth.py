@@ -30,7 +30,7 @@ so AQE's bytes-blind coalescing cannot fold the small local shuffle
 back onto one core, and a caller-supplied high-cardinality column so
 the exchange is deterministic hash partitioning. Row-group counts are
 read from parquet footers with pyarrow in the planning process (cached
-per path under its `filesig` signature) — never a Spark job.
+per file version by `filesig.memo`) — never a Spark job.
 """
 
 from __future__ import annotations
@@ -39,15 +39,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-from parquet_to_hyper_app_spark.sources.filesig import local_path, remember, signature
-
-#: path → (file signature, row-group count); parquet footers are
-#: immutable for a given file version, so an entry only goes stale
-#: when the file is rewritten, which replaces it (see `filesig`).
-#: _RG_CACHE_MAX bounds the pathological case of unboundedly many
-#: DISTINCT paths (uuid-named temp files).
-_RG_CACHE: dict[str, tuple[tuple, int]] = {}
-_RG_CACHE_MAX = 8192
+from parquet_to_hyper_app_spark.sources.filesig import local_path, memo
 
 #: don't even probe footers past this many files: at that point the
 #: gate goes IDENTITY unconditionally (see effective_scan_parallelism)
@@ -115,22 +107,17 @@ def _local_paths(df: DataFrame) -> list[str] | None:
 
 
 def _row_groups(path: str) -> int | None:
-    """Row-group count from the parquet footer (cached); None if the
-    footer can't be read (non-parquet input, concurrent rewrite)."""
-    sig = signature(path)
-    if sig is None:
-        return None
-    hit = _RG_CACHE.get(path)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
+    """Row-group count from the parquet footer (`filesig.memo`: a
+    footer is immutable for a given file version); None if the footer
+    can't be read (non-parquet input, concurrent rewrite)."""
     try:
         import pyarrow.parquet as pq
 
-        rg = pq.ParquetFile(path).metadata.num_row_groups
+        return memo(
+            "row_groups", path, lambda: pq.ParquetFile(path).metadata.num_row_groups
+        )
     except Exception:
         return None
-    remember(_RG_CACHE, _RG_CACHE_MAX, path, (sig, rg))
-    return rg
 
 
 def effective_scan_parallelism(df: DataFrame) -> int | None:

@@ -13,7 +13,6 @@ from __future__ import annotations
 import functools
 import glob
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,9 +59,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     flipped on the first dirty row (caught by the dirty fuzz sweep)."""
     with stream_run() as run:
         raw = events_file_stream(spark, sf_dir, run)
-        out_dir = os.path.join(
-            tempfile.gettempdir(), "p2h_spark_fb", os.path.basename(run), "out"
-        )
+        out_dir = os.path.join(run, "out")
         # the schema every epoch is written with (each batch has raw's schema)
         sink_schema = clean_numeric(raw, exclude=("ts",)).schema
 
@@ -79,17 +76,18 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         run_available(spark, raw.writeStream.foreachBatch(write_batch), run)
-    # an empty/missing source produces zero epochs — no epoch_* dirs —
-    # and reading none would raise an unrelated error; return an empty
-    # frame with the sink schema instead. The epoch directories are
-    # read by name: a glob pattern makes the parquet source probe it as
-    # a streaming-sink metadata path first, which logs a WARN with a
-    # FileNotFoundException stack trace on every run
-    epochs = sorted(glob.glob(os.path.join(out_dir, "epoch_*")))
-    if not epochs:
-        out = spark.createDataFrame([], sink_schema)
-    else:
-        out = spark.read.schema(sink_schema).parquet(*epochs)
+        # an empty/missing source produces zero epochs — no epoch_* dirs —
+        # and reading none would raise an unrelated error; return an empty
+        # frame with the sink schema instead. The epoch directories are
+        # read by name: a glob pattern makes the parquet source probe it
+        # as a streaming-sink metadata path first, which logs a WARN with
+        # a FileNotFoundException stack trace on every run. The read-back
+        # is detached from the run directory, which the block removes
+        epochs = sorted(glob.glob(os.path.join(out_dir, "epoch_*")))
+        if not epochs:
+            out = spark.createDataFrame([], sink_schema)
+        else:
+            out = spark.read.schema(sink_schema).parquet(*epochs).localCheckpoint(eager=True)
     return out.withColumn("ts", F.expr(_SINK_TS_EXPR))
 
 
@@ -122,8 +120,7 @@ def stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     with stream_run() as run:
         raw = events_file_stream(spark, sf_dir, run)
-        out_dir = os.path.join(tempfile.gettempdir(), "p2h_spark_ia", os.path.basename(run))
-        return run_incremental_agg(spark, raw, run, out_dir)
+        return run_incremental_agg(spark, raw, run, os.path.join(run, "snap"))
 
 
 def merge_epoch(batch_df: DataFrame, epoch_id: int, out_dir: str) -> None:
@@ -167,10 +164,10 @@ def run_incremental_agg(
 ) -> DataFrame:
     """Drive the incremental rollup over any events-schema stream in
     run ``run`` and return the final snapshot, read from ``out_dir``
-    (see `stream_incremental_agg`). Separated from the registry query
-    so tests can feed a multi-file source with maxFilesPerTrigger=1 and
-    prove the per-epoch merge is genuinely incremental (>1 snapshot,
-    same final table)."""
+    and detached from it (see `stream_incremental_agg`). Separated from
+    the registry query so tests can feed a multi-file source with
+    maxFilesPerTrigger=1 and prove the per-epoch merge is genuinely
+    incremental (>1 snapshot, same final table)."""
     writer = raw.writeStream.foreachBatch(functools.partial(merge_epoch, out_dir=out_dir))
     run_available(spark, writer, run)
     snaps = sorted(glob.glob(os.path.join(out_dir, "snap_*")))
@@ -178,7 +175,7 @@ def run_incremental_agg(
         return spark.createDataFrame(
             [], "event_type string, n_events bigint, total_value double"
         )
-    final = spark.read.parquet(snaps[-1])
+    final = spark.read.parquet(snaps[-1]).localCheckpoint(eager=True)
     return final.select(
         "event_type",
         "n_events",

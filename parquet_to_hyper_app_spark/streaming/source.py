@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from parquet_to_hyper_app_spark.session import ensure_session_configs
-from parquet_to_hyper_app_spark.sources.filesig import remember, signature
+from parquet_to_hyper_app_spark.sources.filesig import memo
 
 #: state-store partition count for the LOCAL availableNow harness.
 #: Stateful operators create one state store per shuffle partition per
@@ -79,7 +79,7 @@ def stream_run():
     ``<tmp>/p2h_spark_stream/<run>/`` for the source link (``src``) and
     the checkpoint (``ckpt``), removed when the block exits — also when
     the query fails. Everything a run returns must be detached from it
-    (`run_to_memory`) or live elsewhere (the foreachBatch sinks)."""
+    (`run_to_memory`, the foreachBatch sinks' read-backs)."""
     root = os.path.join(tempfile.gettempdir(), "p2h_spark_stream")
     os.makedirs(root, exist_ok=True)
     run = tempfile.mkdtemp(dir=root)
@@ -135,15 +135,6 @@ RAW_EVENTS_SCHEMA = (
     " event_type string, value double, props string"
 )
 
-#: resolved events.parquet path → (file signature, detected (divisor,
-#: multiplier) to µs). Keyed by the RESOLVED path (stable across
-#: queries) — each run's source dir is new and would never hit; the
-#: signature re-probes a rewrite in place that may carry a
-#: different physical unit, replacing the path's entry (see `filesig`).
-_TS_SCALE_CACHE: dict[str, tuple[tuple, tuple[int, int]]] = {}
-_TS_SCALE_CACHE_MAX = 1024
-
-
 def _ts_micros_scale(
     spark: SparkSession, src_dir: str, target: str
 ) -> tuple[int, int]:
@@ -159,40 +150,36 @@ def _ts_micros_scale(
     An arbitrary-first-row probe would misclassify a NULL-leading file
     as seconds and shift every timestamp 10^6×. Batch and stream cannot
     disagree because both are the V1 parquet source with an explicit
-    user schema. A ``target`` that cannot be stat'ed is probed on every
-    call and never cached.
+    user schema. The answer is memoized per version of ``target``
+    (`filesig.memo`; each run's source dir is new and would never
+    hit), so a rewrite or a later batch is probed again.
     """
-    sig = signature(target)
-    hit = _TS_SCALE_CACHE.get(target)
-    if sig is not None and hit is not None and hit[0] == sig:
-        return hit[1]
-    row = (
-        spark.read.schema(RAW_EVENTS_SCHEMA)
-        .parquet(src_dir)
-        .where(F.col("ts").isNotNull())
-        .agg(F.max(F.abs(F.col("ts"))))
-        .first()
-    )
-    ts = row[0] if row is not None else None
-    if ts is None:
-        # empty source / all-NULL ts: there is nothing to convert,
-        # so the identity scale is correct — the stream runs and
-        # produces zero epochs, which the sinks explicitly handle
-        # (raising here would turn a handled empty result into a
-        # query error). Not cached: a first batch arriving later
-        # should get a real magnitude probe.
-        return (1, 1)
-    if ts > 3 * 10**16:
-        scale = (1_000, 1)  # nanoseconds
-    elif ts > 3 * 10**13:
-        scale = (1, 1)  # microseconds
-    elif ts > 3 * 10**10:
-        scale = (1, 1_000)  # milliseconds
-    else:
-        scale = (1, 1_000_000)  # seconds
-    if sig is not None:
-        remember(_TS_SCALE_CACHE, _TS_SCALE_CACHE_MAX, target, (sig, scale))
-    return scale
+
+    def probe() -> tuple[int, int]:
+        row = (
+            spark.read.schema(RAW_EVENTS_SCHEMA)
+            .parquet(src_dir)
+            .where(F.col("ts").isNotNull())
+            .agg(F.max(F.abs(F.col("ts"))))
+            .first()
+        )
+        ts = row[0] if row is not None else None
+        if ts is None:
+            # empty source / all-NULL ts: there is nothing to convert,
+            # so the identity scale is correct — the stream runs and
+            # produces zero epochs, which the sinks explicitly handle
+            # (raising here would turn a handled empty result into a
+            # query error)
+            return (1, 1)
+        if ts > 3 * 10**16:
+            return (1_000, 1)  # nanoseconds
+        if ts > 3 * 10**13:
+            return (1, 1)  # microseconds
+        if ts > 3 * 10**10:
+            return (1, 1_000)  # milliseconds
+        return (1, 1_000_000)  # seconds
+
+    return memo("ts_scale", target, probe)
 
 
 def events_file_stream(spark: SparkSession, sf_dir: str, run: str) -> DataFrame:

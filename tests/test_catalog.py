@@ -1,6 +1,7 @@
 """Schema-resolved table loads: `catalog.read_parquet` reuses the
 schema Spark inferred for a path only while the path's data files and
-the inference confs are unchanged, and its cache stays bounded."""
+the inference confs are unchanged, and the memo holding it
+(`filesig.memo`) stays bounded."""
 
 from __future__ import annotations
 
@@ -10,15 +11,15 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from parquet_to_hyper_app_spark import catalog
 from parquet_to_hyper_app_spark.catalog import load_table, read_parquet
+from parquet_to_hyper_app_spark.sources import filesig
 from parquet_to_hyper_app_spark.sources.filesig import signature
 from tests.conftest import SF_SMOKE, count_jobs
 
 
 def test_unchanged_table_reloads_without_a_job(spark):
     path = os.path.abspath(os.path.join(SF_SMOKE, "orders.parquet"))
-    catalog._SCHEMA_CACHE.pop(path, None)
+    filesig._MEMO.pop(("schema", path), None)
     first = count_jobs(spark, lambda: load_table(spark, SF_SMOKE, "orders"))
     second = count_jobs(spark, lambda: load_table(spark, SF_SMOKE, "orders"))
     assert first >= 1  # the cold load infers (and the counter sees it)
@@ -69,17 +70,17 @@ def test_missing_path_raises_as_before(spark, tmp_path):
     with pytest.raises(AnalysisException) as loaded:
         load_table(spark, str(tmp_path), "gone")
     assert loaded.value.getCondition() == bare.value.getCondition() == "PATH_NOT_FOUND"
-    assert os.path.abspath(str(tmp_path / "gone.parquet")) not in catalog._SCHEMA_CACHE
+    assert ("schema", os.path.abspath(str(tmp_path / "gone.parquet"))) not in filesig._MEMO
 
 
 def test_schema_cache_is_bounded(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(catalog, "_SCHEMA_CACHE_MAX", 3)
+    monkeypatch.setattr(filesig, "_MEMO_MAX", 3)
     for i in range(7):
         pq.write_table(pa.table({"c": [i]}), str(tmp_path / f"t{i}.parquet"))
         load_table(spark, str(tmp_path), f"t{i}")
         load_table(spark, str(tmp_path), f"t{i}")  # a hit adds no entry
-        assert len(catalog._SCHEMA_CACHE) <= 3
-        assert os.path.abspath(str(tmp_path / f"t{i}.parquet")) in catalog._SCHEMA_CACHE
+        assert len(filesig._MEMO) <= 3
+        assert ("schema", os.path.abspath(str(tmp_path / f"t{i}.parquet"))) in filesig._MEMO
 
 
 def test_directory_signature_tracks_data_files_only(tmp_path):

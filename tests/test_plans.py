@@ -152,7 +152,7 @@ def test_bigram_hash_frame_adds_no_exchange(spark):
     from parquet_to_hyper_app_spark.operators.llm.dedup import bigram_hash_frame
 
     docs = load_table(spark, SF_SMOKE, "documents")
-    plan = physical_plan(bigram_hash_frame(docs, persist=False))
+    plan = physical_plan(bigram_hash_frame(docs))
     assert "Exchange" not in plan, plan
 
 

@@ -174,7 +174,9 @@ def test_row_group_cache_replaces_stale_path_entries(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from parquet_to_hyper_app_spark.sources import scanwidth
+    import os
+
+    from parquet_to_hyper_app_spark.sources import filesig, scanwidth
 
     path = str(tmp_path / "rg_cache_probe.parquet")
     for n_rows, want_rg in ((10, 1), (20, 2)):
@@ -183,5 +185,6 @@ def test_row_group_cache_replaces_stale_path_entries(spark, tmp_path):
         # distinct mtime_ns so the staleness check, not luck, decides
         time.sleep(0.01)
         assert scanwidth._row_groups(path) == want_rg
-    assert path in scanwidth._RG_CACHE
-    assert scanwidth._RG_CACHE[path][-1] == 2
+    key = ("row_groups", os.path.abspath(path))
+    assert key in filesig._MEMO
+    assert filesig._MEMO[key][-1] == 2

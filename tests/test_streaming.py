@@ -221,19 +221,19 @@ def test_ts_scale_empty_source_is_identity(spark, tmp_path):
     """An empty (or all-NULL-ts) events source must yield the identity
     scale — the stream then runs and produces zero epochs, which the
     sinks handle; raising would turn a handled empty result into a
-    query error. The probe result is also NOT cached, so a first batch
-    arriving later gets a real magnitude detection."""
+    query error. The answer is memoized per version of the source, so
+    a first batch arriving later gets a real magnitude detection."""
     from parquet_to_hyper_app_spark.streaming.source import (
-        _TS_SCALE_CACHE,
         RAW_EVENTS_SCHEMA,
         _ts_micros_scale,
     )
 
-    src = str(tmp_path / "empty_events")
+    src = str(tmp_path / "events_src")
     spark.createDataFrame([], RAW_EVENTS_SCHEMA).write.parquet(src)
-    key = "test-empty-src"
-    assert _ts_micros_scale(spark, src, key) == (1, 1)
-    assert key not in _TS_SCALE_CACHE
+    assert _ts_micros_scale(spark, src, src) == (1, 1)
+    nanos = [(1, 1_600_000_000_000_000_000, 1, "view", 1.0, "{}")]
+    spark.createDataFrame(nanos, RAW_EVENTS_SCHEMA).write.mode("append").parquet(src)
+    assert _ts_micros_scale(spark, src, src) == (1000, 1)
 
 
 def test_dedup_watermark_runs_one_micro_batch(spark):
@@ -306,14 +306,25 @@ def _temp_views(spark) -> set[str]:
 
 def test_stream_keys_leave_no_stream_dir(spark):
     """Every streaming run removes its directory (source symlink,
-    checkpoint, state store) once its query has terminated and the
-    result no longer reads it."""
+    checkpoint, state store, foreachBatch sink output) once its query
+    has terminated and the result no longer reads it; no sink output
+    lands in a directory of its own under the temp root."""
     import os
+    import tempfile
 
     from parquet_to_hyper_app_spark.registry import load_all
 
+    def sink_entries() -> set[str]:
+        found = set()
+        for name in ("p2h_spark_fb", "p2h_spark_ia"):
+            path = os.path.join(tempfile.gettempdir(), name)
+            if os.path.isdir(path):
+                found |= {name} | {os.path.join(name, e) for e in os.listdir(path)}
+        return found
+
     root = _stream_root()
     before = set(os.listdir(root))
+    sinks_before = sink_entries()
     specs = load_all()
     # run_to_memory, stream_foreach_batch, run_incremental_agg, and the
     # two documents streams
@@ -326,6 +337,7 @@ def test_stream_keys_leave_no_stream_dir(spark):
     ):
         assert specs[key].fn(spark, SF_SMOKE).count() > 0, key
     assert set(os.listdir(root)) - before == set()
+    assert sink_entries() - sinks_before == set()
 
 
 def test_failed_stream_query_leaves_no_run_dir_or_view(spark):

@@ -92,24 +92,22 @@ def df_shape(spark, probe_dir: str, caps: list[int]) -> dict:
 
     from parquet_to_hyper_app_spark.catalog import load_table
     from parquet_to_hyper_app_spark.operators.llm.dedup import bigram_hash_frame
+    from parquet_to_hyper_app_spark.session import persisted
     from parquet_to_hyper_app_spark.sources.scanwidth import scan_spread
 
-    grams = bigram_hash_frame(
-        scan_spread(load_table(spark, probe_dir, "documents"), "doc_id")
-    )
-    occ = grams.select("doc_id", "lang", F.explode("hashes").alias("h"))
-    df_tab = occ.groupBy("lang", "h").agg(F.count(F.lit(1)).alias("df"))
-    aggs = [
-        F.sum(F.col("df") * F.col("df")).alias("sum_df2"),
-        F.max("df").alias("max_df"),
-        F.count(F.lit(1)).alias("n_grams"),
-    ] + [
-        F.sum((F.col("df") > c).cast("long")).alias(f"head_{c}")
-        for c in caps
-    ]
-    row = df_tab.agg(*aggs).first().asDict()
-    grams.unpersist()
-    return row
+    docs = scan_spread(load_table(spark, probe_dir, "documents"), "doc_id")
+    with persisted(bigram_hash_frame(docs)) as grams:
+        occ = grams.select("doc_id", "lang", F.explode("hashes").alias("h"))
+        df_tab = occ.groupBy("lang", "h").agg(F.count(F.lit(1)).alias("df"))
+        aggs = [
+            F.sum(F.col("df") * F.col("df")).alias("sum_df2"),
+            F.max("df").alias("max_df"),
+            F.count(F.lit(1)).alias("n_grams"),
+        ] + [
+            F.sum((F.col("df") > c).cast("long")).alias(f"head_{c}")
+            for c in caps
+        ]
+        return df_tab.agg(*aggs).first().asDict()
 
 
 def timed_frame(build, reps: int) -> tuple[float, int, object]:
