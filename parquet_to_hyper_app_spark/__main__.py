@@ -31,9 +31,8 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = build_session("convert-cli")
     try:
-        out = convert(spark, args.input, args.output, fmt=args.format)
-        n = out.count()
-        print(f"converted {n} rows -> {args.output} ({args.format})")
+        out, metrics = convert(spark, args.input, args.output, fmt=args.format)
+        print(f"converted {metrics['rows_processed']} rows -> {args.output} ({args.format})")
         if args.hyper:
             written = write_hyper(out, args.hyper)
             print(f"hyper export: {written} rows -> {args.hyper}")

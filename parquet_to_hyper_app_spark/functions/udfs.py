@@ -155,12 +155,11 @@ def udf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S39c: Python UDTF via LATERAL join — tokenizer exploding each
     document into (token, position) rows; only docs with ≥1 token
     appear (inner lateral), mirrored by generate_series in the oracle."""
-    docs = load_table(spark, sf_dir, "documents")
     spark.udtf.register("split_tokens", SplitTokensUDTF)
-    docs.createOrReplaceTempView("__docs_udtf")
     return spark.sql(
         """
         SELECT d.doc_id, s.token, s.token_idx
-        FROM __docs_udtf d, LATERAL split_tokens(d.text) s
-        """
+        FROM {docs} d, LATERAL split_tokens(d.text) s
+        """,
+        docs=load_table(spark, sf_dir, "documents"),
     )

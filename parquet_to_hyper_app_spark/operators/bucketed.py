@@ -39,7 +39,7 @@ _N_BUCKETS = 8
 _SALT_BUCKETS = 32
 
 
-def write_bucketed(df: DataFrame, table: str, path: str, key: str, n_buckets: int = _N_BUCKETS) -> None:
+def write_bucketed(df: DataFrame, table: str, path: str, key: str) -> None:
     """Materialize ``df`` as an external bucketed+sorted table.
 
     Bucketed layout lives half in the files, half in the catalog (the
@@ -50,7 +50,7 @@ def write_bucketed(df: DataFrame, table: str, path: str, key: str, n_buckets: in
     (
         df.write.mode("overwrite")
         .option("path", path)
-        .bucketBy(n_buckets, key)
+        .bucketBy(_N_BUCKETS, key)
         .sortBy(key)
         .format("parquet")
         .saveAsTable(table)

@@ -789,7 +789,7 @@ def _auto_df_cap(df_tab: DataFrame, min_s2: float | None = None) -> int | None:
 
 def containment_frame(
     spark: SparkSession, sf_dir: str, df_cap: int | str | None = None,
-    auto_cap_min_s2: float | None = None, materialize: bool = True,
+    auto_cap_min_s2: float | None = None,
 ) -> DataFrame:
     """The containment engine behind `dedup_containment`: every ordered
     same-language pair (src, dst) of non-blank docs with
@@ -833,9 +833,7 @@ def containment_frame(
     floor for executors smaller or larger than its 1e8-row calibration
     and is valid only with "auto".
 
-    materialize=False returns the lazy plan (no eager checkpoint) for
-    inspection; executing callers keep the default, which checkpoints
-    the small pair set inside the `persisted` blocks."""
+    The small pair set is checkpointed inside the `persisted` blocks."""
     # a floor passed alongside a non-"auto" df_cap would be silently
     # dead, and bool (an int subclass that would gate at Σdf² > 1.0),
     # negatives and NaN are config typos, not regimes
@@ -913,8 +911,6 @@ def containment_frame(
             F.col("dst").alias("doc_dst"),
             "containment",
         )
-        if not materialize:
-            return out
         return out.localCheckpoint(eager=True)
 
 

@@ -52,10 +52,10 @@ from parquet_to_hyper_app_spark.sources.scanwidth import scan_spread
 # ---------------------------------------------------------------------------
 
 
-def dedup_exact_df(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the smallest id per exact content (sha256) group."""
-    h = F.sha2(F.col(text_col), 256)
-    w = W.partitionBy(h).orderBy(id_col)
+def dedup_exact_df(df: DataFrame) -> DataFrame:
+    """Keep the smallest doc_id per exact text content (sha256) group."""
+    h = F.sha2(F.col("text"), 256)
+    w = W.partitionBy(h).orderBy("doc_id")
     return (
         df.withColumn("content_hash", h)
         .withColumn("rn", F.row_number().over(w))
@@ -211,10 +211,9 @@ def minhash_candidates(docs: DataFrame) -> DataFrame:
     return _candidates_from_signatures(sigged)
 
 
-def verified_near_dup_pairs(
-    docs: DataFrame, threshold: float = 0.5, materialize: bool = True
-) -> DataFrame:
-    """Candidate pairs whose exact shingle-Jaccard clears threshold.
+def verified_near_dup_pairs(docs: DataFrame) -> DataFrame:
+    """Candidate pairs whose exact shingle-Jaccard is ≥ 0.5, checkpointed
+    inside the block (the verified pair set is small).
 
     Shingles+signatures are computed ONCE and persisted (`persisted`):
     the DAG branches four ways (bucket self-join a/b, verify join a/b)
@@ -222,10 +221,6 @@ def verified_near_dup_pairs(
     persisted set is (doc_id, shingles, signature) — tiny next to the
     corpus, and at cluster scale this is the dataset you'd checkpoint
     anyway.
-
-    materialize=True (default) eagerly checkpoints the (small) verified
-    pair set inside the block; pass False to get the full lazy plan
-    (plan inspection/tests).
     """
     sigged = _with_signature(_with_shingles(docs)).select(
         "doc_id", "shingles", "signature"
@@ -241,11 +236,9 @@ def verified_near_dup_pairs(
             pairs.join(a, "doc_a")
             .join(b, "doc_b")
             .withColumn("jaccard", inter.cast("double") / union)
-            .filter(F.col("jaccard") >= threshold)
+            .filter(F.col("jaccard") >= 0.5)
             .select("doc_a", "doc_b", "jaccard")
         )
-        if not materialize:
-            return verified
         return verified.localCheckpoint(eager=True)
 
 

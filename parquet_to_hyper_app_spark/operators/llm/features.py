@@ -533,7 +533,7 @@ def _nearest_chunked(mats, x2, c_arr):
     return out
 
 
-def _np_lloyd(mats, c: int, iters: int = _HIER_ITERS):
+def _np_lloyd(mats, c: int):
     """Deterministic driver-side Lloyd's over a dense float64 slab —
     the COARSE trainer for hierarchical assignment. Runs on the fine
     CENTROIDS (k×dim, already materialized on the driver by either
@@ -574,7 +574,7 @@ def _np_lloyd(mats, c: int, iters: int = _HIER_ITERS):
     with np.errstate(invalid="ignore", over="ignore"):
         x2 = np.einsum("nd,nd->n", mats, mats)
     finite = np.isfinite(mats).all(axis=1)
-    for _ in range(iters):
+    for _ in range(_HIER_ITERS):
         assign = _nearest_chunked(mats, x2, cents)
         sums = np.zeros_like(cents)
         # over="ignore": finite-but-huge rows (1e300-scale plants) can

@@ -38,16 +38,14 @@ def cosine(ea: Column, eb: Column) -> Column:
     return dot / (F.sqrt(sq(ea)) * F.sqrt(sq(eb)))
 
 
-#: well-defined vectors only: similarity/dedup semantics are undefined
-#: for a NULL or empty embedding (no cosine exists), so the search and
-#: near-dup operators exclude them on BOTH sides — the vector-column
-#: analogue of the "NULL text ≡ empty document" rule (review r5).
-#: Profiling ops (array_ops, embedding_quantize) keep NULL-propagation.
-VALID_VEC_SQL = "embedding IS NOT NULL AND len(embedding) > 0"
-
-
 def valid_vectors(emb: DataFrame) -> DataFrame:
-    """Rows whose embedding is defined (non-NULL, non-empty)."""
+    """Rows whose embedding is defined (non-NULL, non-empty).
+
+    Similarity/dedup semantics are undefined for a NULL or empty
+    embedding (no cosine exists), so the search and near-dup operators
+    exclude them on BOTH sides — the vector-column analogue of the
+    "NULL text ≡ empty document" rule (review r5). Profiling ops
+    (array_ops, embedding_quantize) keep NULL-propagation."""
     return emb.filter(F.col("embedding").isNotNull() & (F.size("embedding") > 0))
 
 
@@ -102,8 +100,8 @@ def corpus_dim(emb: DataFrame) -> int | None:
     return None if row is None or row["d"] is None else int(row["d"])
 
 
-def finite_components(col: str = "embedding"):
-    """TRUE iff every component of the array column is non-NULL and
+def finite_components():
+    """TRUE iff every component of ``embedding`` is non-NULL and
     finite — the Spark mirror of the oracle's list_filter count.
 
     Implemented as one forall() fold, not filter()+size: the filtered
@@ -116,7 +114,7 @@ def finite_components(col: str = "embedding"):
     and when() exclude non-TRUE, exactly like a kept-count
     shortfall."""
     return F.forall(
-        col,
+        "embedding",
         lambda x: x.isNotNull() & ~F.isnan(x) & (F.abs(x) != F.lit(float("inf"))),
     )
 
@@ -246,7 +244,7 @@ def embedding_count_for(spark: SparkSession, sf_dir: str) -> int:
     return _embeddings_stat(spark, sf_dir, "embeddings_count", DataFrame.count)
 
 
-def bucket_topk(cand: DataFrame, q: DataFrame, bucket_col: str, k: int = _TOP_K) -> DataFrame:
+def bucket_topk(cand: DataFrame, q: DataFrame, bucket_col: str) -> DataFrame:
     """Shared inverted-list search: join candidates to broadcast
     queries on the bucket key, exact cosine, per-query top-k.
     Used by both the LSH (similarity_ivf) and KMeans (features.py)
@@ -257,14 +255,12 @@ def bucket_topk(cand: DataFrame, q: DataFrame, bucket_col: str, k: int = _TOP_K)
         .filter(F.col("q_id") != F.col("neighbor_id"))
         .withColumn("cos_sim", cosine(F.col("ea"), F.col("eb")))
         .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _TOP_K)
         .select("q_id", "neighbor_id", "cos_sim", "rank")
     )
 
 
-def with_recall_audit(
-    approx: DataFrame, emb: DataFrame, queries: DataFrame, k: int = _TOP_K
-) -> DataFrame:
+def with_recall_audit(approx: DataFrame, emb: DataFrame, queries: DataFrame) -> DataFrame:
     """Attach per-query ``recall_at_k`` (|approx ∩ exact| / k vs the
     brute-force top-k) to an approximate search result.
 
@@ -276,10 +272,10 @@ def with_recall_audit(
     affordable wherever the baseline itself is; on a 100 TB serving
     index, run it on a sampled query panel instead of every request.
     """
-    exact = brute_force_topk(emb, queries, k).select("q_id", "neighbor_id")
+    exact = brute_force_topk(emb, queries).select("q_id", "neighbor_id")
     hits = approx.join(exact, ["q_id", "neighbor_id"], "left_semi")
     recall = hits.groupBy("q_id").agg(
-        (F.count(F.lit(1)) / F.lit(float(k))).alias("recall_at_k")
+        (F.count(F.lit(1)) / F.lit(float(_TOP_K))).alias("recall_at_k")
     )
     return (
         approx.join(recall, "q_id", "left")
@@ -293,11 +289,9 @@ def with_recall_audit(
 RECALL_FLOOR = 0.1
 
 
-def enforce_recall_floor(
-    audited: DataFrame, queries: DataFrame, floor: float = RECALL_FLOOR
-) -> DataFrame:
+def enforce_recall_floor(audited: DataFrame, queries: DataFrame) -> DataFrame:
     """Fail LOUDLY when an approximate search degrades: if the mean
-    per-query ``recall_at_k`` falls below ``floor``, emit an EMPTY
+    per-query ``recall_at_k`` falls below `RECALL_FLOOR`, emit an EMPTY
     frame instead of plausible-looking garbage. The rows-only driver
     check can't value-check an ANN result, but it does record the row
     count — an empty result is a visible red, a quietly-wrong top-k is
@@ -335,7 +329,7 @@ def enforce_recall_floor(
     )
     return (
         audited.crossJoin(F.broadcast(mean))
-        .filter(F.col("__mean_recall") >= floor)
+        .filter(F.col("__mean_recall") >= RECALL_FLOOR)
         .drop("__mean_recall")
     )
 

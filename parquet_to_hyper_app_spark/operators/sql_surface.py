@@ -5,6 +5,10 @@ exercise the same Catalyst frontend through SQL text — grouping sets,
 correlated/scalar subqueries, ordered-set aggregates, argmin/argmax,
 lateral explode and unpivot — proving the engine exposes a full SQL
 surface (the reference has no SQL layer at all, SURVEY.md §2A).
+
+Input frames reach the SQL text as ``spark.sql`` keyword arguments:
+PySpark binds each to a uuid-named temp view that it drops before
+``spark.sql`` returns, so no query leaves a name in the session catalog.
 """
 
 from __future__ import annotations
@@ -14,19 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from parquet_to_hyper_app_spark.catalog import load_table
 from parquet_to_hyper_app_spark.registry import query
 from parquet_to_hyper_app_spark.sources.scanwidth import scan_spread
-
-
-def _view(spark: SparkSession, sf_dir: str, name: str, spread_on: str | None = None) -> str:
-    # spread_on: parallelize first-stage compute past a row-group-
-    # limited scan (sources/scanwidth.py; identity on production
-    # layouts). Used by the percentile keys, whose partial aggregation
-    # buffers every group value and would otherwise run on one core.
-    vname = f"__{name}"
-    df = load_table(spark, sf_dir, name)
-    if spread_on is not None:
-        df = scan_spread(df, spread_on)
-    df.createOrReplaceTempView(vname)
-    return vname
 
 
 @query(
@@ -41,14 +32,14 @@ def _view(spark: SparkSession, sf_dir: str, name: str, spread_on: str | None = N
 def sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S15b: explicit GROUPING SETS (the generalization rollup/cube
     compile to) via the SQL frontend."""
-    v = _view(spark, sf_dir, "orders")
     return spark.sql(
-        f"""
+        """
         SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
                CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total_price
         FROM {v}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        """
+        """,
+        v=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -66,16 +57,16 @@ def sql_subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS + scalar subquery. Catalyst rewrites the
     EXISTS into a left-semi join and broadcasts the single-row scalar
     aggregate — no per-row subquery execution at any scale."""
-    c = _view(spark, sf_dir, "customer")
-    o = _view(spark, sf_dir, "orders")
     return spark.sql(
-        f"""
+        """
         SELECT c_custkey, c_name, c_acctbal
         FROM {c}
         WHERE EXISTS (SELECT 1 FROM {o} WHERE o_custkey = c_custkey
                         AND o_orderstatus = 'F')
           AND c_acctbal > (SELECT avg(c_acctbal) FROM {c})
-        """
+        """,
+        c=load_table(spark, sf_dir, "customer"),
+        o=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -122,9 +113,8 @@ def sql_argminmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     (IS NOT DISTINCT FROM): GROUP BY makes a NULL status a real group
     whose arg pick must survive the join — a plain USING join dropped
     it, caught by the r6 out-of-domain/NULL status fuzz plant."""
-    v = _view(spark, sf_dir, "orders")
     return spark.sql(
-        f"""
+        """
         SELECT o_orderstatus,
                max_by(o_orderkey, struct(o_totalprice, CAST(o_orderkey AS DOUBLE)))
                    FILTER (WHERE o_totalprice IS NOT NULL) AS biggest_order,
@@ -133,7 +123,8 @@ def sql_argminmax(spark: SparkSession, sf_dir: str) -> DataFrame:
                max(o_totalprice) AS max_price,
                min(o_totalprice) AS min_price
         FROM {v} GROUP BY o_orderstatus
-        """
+        """,
+        v=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -151,14 +142,17 @@ def sql_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     `quantile_cont`). The approximate sketch variant
     (approx_percentile / percentile_approx) is deliberately NOT
     oracle-paired — sketches differ across engines."""
-    v = _view(spark, sf_dir, "lineitem", spread_on="l_orderkey")
+    # scan_spread: the partial aggregation buffers every group value
+    # and would otherwise run on one core behind a row-group-limited
+    # scan (sources/scanwidth.py; identity on production layouts)
     return spark.sql(
-        f"""
+        """
         SELECT l_returnflag,
                round(percentile(l_quantity, 0.5), 6) AS median_qty,
                round(percentile(l_extendedprice, 0.9), 6) AS p90_price
         FROM {v} GROUP BY l_returnflag
-        """
+        """,
+        v=scan_spread(load_table(spark, sf_dir, "lineitem"), "l_orderkey"),
     )
 
 
@@ -189,9 +183,8 @@ def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     check. Both sketches come from ONE aggregation pass; the tighter
     accuracy floor stays asserted in tests.
     """
-    v = _view(spark, sf_dir, "lineitem")
     return spark.sql(
-        f"""
+        """
         SELECT l_returnflag,
                element_at(exact, 1)  AS exact_p50,
                element_at(exact, 2)  AS exact_p90,
@@ -205,7 +198,8 @@ def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
                    percentile_approx(l_extendedprice, array(0.5, 0.9), 2147483647) AS exact
             FROM {v} GROUP BY l_returnflag
         )
-        """
+        """,
+        v=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -220,13 +214,13 @@ def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sql_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL VIEW posexplode — array → rows with position."""
-    v = _view(spark, sf_dir, "embeddings")
     return spark.sql(
-        f"""
+        """
         SELECT vec_id, pos, CAST(dim_val AS DOUBLE) AS dim_val
         FROM {v}
         LATERAL VIEW posexplode(slice(embedding, 1, 8)) AS pos, dim_val
-        """
+        """,
+        v=load_table(spark, sf_dir, "embeddings"),
     )
 
 
@@ -271,13 +265,15 @@ def agg_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     only way to make string aggregation reproducible without a global
     sort. Group state is bounded by the distinct-value count, not the
     row count, because the duplicate elimination runs first."""
-    v = _view(spark, sf_dir, "orders")
-    return spark.sql(f"""
+    return spark.sql(
+        """
         SELECT o_orderstatus,
                array_join(array_sort(collect_list(o_orderpriority)), ',') AS priorities
         FROM (SELECT DISTINCT o_orderstatus, o_orderpriority FROM {v})
         GROUP BY o_orderstatus
-    """)
+        """,
+        v=load_table(spark, sf_dir, "orders"),
+    )
 
 
 @query(
@@ -297,12 +293,14 @@ def sql_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a per-row re-execution (which is what a naive interpreter,
     and the oracle's textual form, would imply). Decimal-exact sum per
     the money convention."""
-    co = _view(spark, sf_dir, "customer")
-    oo = _view(spark, sf_dir, "orders")
-    return spark.sql(f"""
+    return spark.sql(
+        """
         SELECT c_custkey, c_name,
                (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
                 FROM {oo} o WHERE o.o_custkey = c.c_custkey) AS total_spend
         FROM {co} c
         WHERE c_custkey < 200
-    """)
+        """,
+        co=load_table(spark, sf_dir, "customer"),
+        oo=load_table(spark, sf_dir, "orders"),
+    )

@@ -9,8 +9,10 @@ Catalyst/Tungsten's job (SURVEY.md §4.2) — none of the reference's
 manual batch loop, GC calls or row materialization survives.
 
 Sink choices:
-- parquet/orc/csv directory sink (default; scales to any cluster size —
-  one file per task, no driver bottleneck);
+- parquet/orc/csv/json directory sink (default parquet; scales to any
+  cluster size — one file per task, no driver bottleneck), read back
+  with the schema it was written with, so no format loses or reorders
+  a column and no read-back pays an inference job;
 - JDBC sink (`write_jdbc`) for the reference's "insert into a database
   table" semantics — per-partition batched inserts replace the
   reference's single-threaded Inserter loop (app.py:128-131);
@@ -31,29 +33,28 @@ import zipfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_to_hyper_app_spark.catalog import load_table
+from parquet_to_hyper_app_spark.catalog import load_table, read_parquet
 from parquet_to_hyper_app_spark.operators.cleaning import clean_numeric, normalize_schema
 from parquet_to_hyper_app_spark.registry import query
 from parquet_to_hyper_app_spark.session import ensure_session_configs
 
 
 def convert(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> DataFrame:
-    """Scan → clean → widen → write; returns the written-back DataFrame.
+    spark: SparkSession, input_path: str, output_path: str, fmt: str = "parquet"
+) -> tuple[DataFrame, dict]:
+    """Scan → clean → widen → write; returns the sink read back with the
+    schema it was written with, and the pipeline metrics.
 
-    Row-count verification (reference app.py:156-160 checks
-    rows_processed) falls out of re-reading the sink: callers compare
-    ``convert(...).count()`` with the source count.
+    The metrics replace the reference's per-chunk progress counter and
+    its rows_processed check (R10, app.py:106,133-136,156-160): an
+    Observation on the written frame counts ``rows_processed`` during
+    the write itself, with no second pass over the data.
 
     Raises the typed errors from sources/errors.py (the reference's
     R14 ladder, app.py:163-174) instead of string-matching messages.
     """
     from pyspark.errors import AnalysisException
+    from pyspark.sql import Observation
 
     from parquet_to_hyper_app_spark.sources.errors import (
         ConversionMemoryError,
@@ -63,15 +64,17 @@ def convert(
 
     ensure_session_configs(spark)
     try:
-        src = spark.read.parquet(input_path)
+        src = read_parquet(spark, input_path)
     except AnalysisException as e:
         raise ConversionSourceError(f"cannot open parquet source {input_path!r}: {e}") from e
     try:
         df = normalize_schema(clean_numeric(src))
     except AnalysisException as e:  # plan-time schema/cast failures only
         raise ConversionSchemaError(f"schema cannot be normalized: {e}") from e
+    obs = Observation()
+    observed = df.observe(obs, F.count(F.lit(1)).alias("rows_processed"))
     try:
-        df.write.format(fmt).mode(mode).save(output_path)
+        observed.write.format(fmt).mode("overwrite").save(output_path)
     except Exception as e:  # pragma: no cover - hard to provoke locally
         # cast/widening problems mostly surface lazily HERE, not at
         # plan time; JVM OOMs arrive as Py4J errors wrapping
@@ -86,42 +89,18 @@ def convert(
         if "CAST_INVALID_INPUT" in r or "CANNOT_UP_CAST" in r or "SparkArithmeticException" in r:
             raise ConversionSchemaError(f"cast failed during conversion: {e}") from e
         raise
-    return spark.read.format(fmt).load(output_path)
+    return spark.read.format(fmt).schema(df.schema).load(output_path), obs.get
 
 
-def convert_with_metrics(
-    spark: SparkSession, input_path: str, output_path: str, fmt: str = "parquet"
-):
-    """Convert with pipeline metrics — the Spark-native replacement for
-    the reference's per-chunk progress counter (R10, app.py:106,133-136).
-
-    `df.observe` attaches named aggregates evaluated DURING the write
-    (no second pass over the data): rows processed, null/NaN cells
-    cleaned per key column. Returns (written-back DataFrame, metrics
-    dict). On a cluster the same Observation streams to listeners for
-    live progress.
-    """
-    from pyspark.sql import Observation
-
-    ensure_session_configs(spark)
-    src = spark.read.parquet(input_path)
-    obs = Observation("convert_metrics")
-    df = normalize_schema(clean_numeric(src)).observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_processed"),
-    )
-    df.write.format(fmt).mode("overwrite").save(output_path)
-    return spark.read.format(fmt).load(output_path), obs.get
-
-
-def write_jdbc(df: DataFrame, url: str, table: str, batchsize: int = 10_000, **options) -> None:
+def write_jdbc(df: DataFrame, url: str, table: str, **options) -> None:
     """Database-table sink: per-partition batched inserts (reference's
-    Inserter.add_rows loop, app.py:128-131, parallelized per partition)."""
+    Inserter.add_rows loop, app.py:128-131, parallelized per partition)
+    of 10 000 rows per batch unless ``options`` sets ``batchsize``."""
     (
         df.write.format("jdbc")
         .option("url", url)
         .option("dbtable", table)
-        .option("batchsize", str(batchsize))
+        .option("batchsize", "10000")
         .options(**options)
         .mode("append")
         .save()
@@ -208,12 +187,13 @@ def write_hyper(df: DataFrame, hyper_path: str, batch_rows: int = 10_000) -> int
     return rows_written
 
 
-def compress_to_zip(path: str, zip_path: str | None = None) -> str:
-    """Zip-DEFLATE a sink file/directory (reference app.py:54-65 parity).
+def compress_to_zip(path: str) -> str:
+    """Zip-DEFLATE a sink file/directory into ``<path>.zip`` (reference
+    app.py:54-65 parity).
 
     Driver-side delivery step, not part of any distributed plan.
     """
-    zip_path = zip_path or path.rstrip("/") + ".zip"
+    zip_path = path.rstrip("/") + ".zip"
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
         if os.path.isdir(path):
             for root, _dirs, files in os.walk(path):
@@ -253,7 +233,7 @@ def convert_sink_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole pipeline, not just rows-only.
     """
     sink = os.path.join(tempfile.gettempdir(), "parquet_to_hyper_app_spark_sink", "lineitem")
-    return convert(spark, os.path.join(sf_dir, "lineitem.parquet"), sink)
+    return convert(spark, os.path.join(sf_dir, "lineitem.parquet"), sink)[0]
 
 
 @query(

@@ -6,6 +6,11 @@ planning time (PartitionFilters in the scan, zero I/O for other
 partitions). This module writes a hive-layout partitioned sink and
 reads it back pruned — `tests/test_plans.py` asserts the pruning
 actually happens in the plan.
+
+Every read of a sink written here passes the schema it was written
+with: no read-back pays a schema-inference job, and the partition
+column keeps its written type instead of one inferred from directory
+names.
 """
 
 from __future__ import annotations
@@ -69,7 +74,8 @@ def partitioned_sink_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory is scanned (PartitionFilters, not a data filter)."""
     path = partitioned_orders_path(spark, sf_dir)
     return (
-        spark.read.parquet(path)
+        spark.read.schema(load_table(spark, sf_dir, "orders").schema)
+        .parquet(path)
         .filter(F.col("o_orderstatus") == "F")
         .select(
             "o_orderkey",
@@ -118,8 +124,8 @@ def sink_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     frag = os.path.join(base, "fragmented")
     li.repartition(64).write.mode("overwrite").parquet(frag)
     compacted = os.path.join(base, "compacted")
-    compact_files(spark.read.parquet(frag), compacted)
-    return spark.read.parquet(compacted)
+    compact_files(spark.read.schema(li.schema).parquet(frag), compacted)
+    return spark.read.schema(li.schema).parquet(compacted)
 
 
 @query("sink_range_clustered", oracle="SELECT * FROM lineitem")
@@ -146,7 +152,7 @@ def sink_range_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(path)
     )
-    return spark.read.parquet(path)
+    return spark.read.schema(li.schema).parquet(path)
 
 
 #: bits per dimension for the z-order curve (16 → 32-bit z-values)
@@ -230,15 +236,15 @@ def sink_zorder_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("ck_lo", "ck_hi", "d_lo", "d_hi")
     )
     path = os.path.join(tempfile.gettempdir(), "p2h_spark_part", "zorder_clustered")
-    (
+    clustered = (
         with_z.repartitionByRange(8, "__z")
         .sortWithinPartitions("__z")
         .drop("__ck_b", "__d_b", "__z")
-        .write.mode("overwrite")
-        .parquet(path)
     )
+    clustered.write.mode("overwrite").parquet(path)
     return (
-        spark.read.parquet(path)
+        spark.read.schema(clustered.schema)
+        .parquet(path)
         .filter(F.col("o_custkey").between(100, 300))
         .filter(
             F.col("o_orderdate").between(

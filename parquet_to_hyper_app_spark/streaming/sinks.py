@@ -33,6 +33,10 @@ from parquet_to_hyper_app_spark.streaming.source import (
 #: — the unit conversion happened once in events_file_stream)
 _SINK_TS_EXPR = "CAST(timestamp_micros(ts) AS TIMESTAMP_NTZ)"
 
+#: what `merge_epoch` writes to every rollup snapshot, and so what every
+#: snapshot is read back with
+_SNAP_SCHEMA = "event_type string, n_events bigint, cents bigint"
+
 
 @query(
     "stream_foreach_batch",
@@ -149,7 +153,7 @@ def merge_epoch(batch_df: DataFrame, epoch_id: int, out_dir: str) -> None:
         if int(p.rsplit("_", 1)[1]) < epoch_id
     )
     if prior:
-        prev = batch_df.sparkSession.read.parquet(prior[-1])
+        prev = batch_df.sparkSession.read.schema(_SNAP_SCHEMA).parquet(prior[-1])
         part = (
             part.unionByName(prev)
             .groupBy("event_type")
@@ -172,10 +176,9 @@ def run_incremental_agg(
     run_available(spark, writer, run)
     snaps = sorted(glob.glob(os.path.join(out_dir, "snap_*")))
     if not snaps:
-        return spark.createDataFrame(
-            [], "event_type string, n_events bigint, total_value double"
-        )
-    final = spark.read.parquet(snaps[-1]).localCheckpoint(eager=True)
+        final = spark.createDataFrame([], _SNAP_SCHEMA)
+    else:
+        final = spark.read.schema(_SNAP_SCHEMA).parquet(snaps[-1]).localCheckpoint(eager=True)
     return final.select(
         "event_type",
         "n_events",

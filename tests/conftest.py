@@ -35,6 +35,19 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def lazy_checkpoints(spark, monkeypatch):
+    """``localCheckpoint`` returns its frame unchanged for the test.
+
+    A function that checkpoints its result inside a ``persisted`` block
+    then hands back the lazy frame; planned after the block has exited,
+    that frame reads nothing from the cache, so its plan is the full
+    uncached one."""
+    monkeypatch.setattr(
+        type(spark.range(1)), "localCheckpoint", lambda self, *_a, **_kw: self
+    )
+
+
 def count_jobs(spark, fn) -> int:
     """Spark jobs started while ``fn()`` runs, counted through a
     throwaway job group (the listener bus is drained first, so a job

@@ -96,7 +96,15 @@ def test_shuffle_budgets(executed_stats):
 
 #: keys whose build (``QuerySpec.fn``) only plans: once the tables they
 #: read have had their schemas resolved, building them runs no Spark job
-JOB_FREE_BUILDS = ("sort_limit", "normalize_schema", "join_inner", "tpch_q3")
+JOB_FREE_BUILDS = (
+    "sort_limit",
+    "normalize_schema",
+    "join_inner",
+    "tpch_q3",
+    # the sink is written once per source state; the read-back passes
+    # the orders schema instead of inferring one from the files
+    "partitioned_sink_prune",
+)
 
 
 def test_warm_builds_run_no_jobs(spark):
@@ -108,6 +116,30 @@ def test_warm_builds_run_no_jobs(spark):
         fn = specs[key].fn
         fn(spark, SF_SMOKE)
         assert count_jobs(spark, lambda: fn(spark, SF_SMOKE)) == 0, key
+
+
+#: jobs a warm build of each sink key may start at sf0.001: its writes,
+#: the shuffle-map and range-sampling jobs those writes plan, and the
+#: eager detach of a streamed result. Every read of a file the key has
+#: just written passes the schema it was written with, so none of them
+#: is a schema-inference job; an inferring read-back would add one.
+SINK_BUILD_JOB_CEILINGS = {
+    "convert_sink": 1,
+    "sink_compacted": 4,
+    "sink_range_clustered": 3,
+    "sink_zorder_clustered": 7,
+    "stream_incremental_agg": 1,
+}
+
+
+@pytest.mark.parametrize("key", sorted(SINK_BUILD_JOB_CEILINGS))
+def test_sink_read_backs_infer_no_schema(spark, key):
+    """A warm build of a sink key starts no job beyond the work it
+    writes: no read-back of its own output infers a schema."""
+    fn = load_all()[key].fn
+    fn(spark, SF_SMOKE)
+    n = count_jobs(spark, lambda: fn(spark, SF_SMOKE))
+    assert n <= SINK_BUILD_JOB_CEILINGS[key], n
 
 
 #: jobs a warm dedup_containment run (build + noop write) may start at
@@ -132,12 +164,12 @@ def test_containment_job_budget(spark):
     assert n <= CONTAINMENT_JOB_BUDGET, n
 
 
-def test_registered_containment_plan_has_no_window(spark):
+def test_registered_containment_plan_has_no_window(spark, lazy_checkpoints):
     """The registered (uncapped) containment plan ranks nothing: no df
     window, no per-doc prefix rank."""
     from parquet_to_hyper_app_spark.operators.llm.corpus import containment_frame
 
-    lazy = containment_frame(spark, SF_SMOKE, materialize=False)
+    lazy = containment_frame(spark, SF_SMOKE)
     lazy.foreachPartition(lambda _it: None)
     plan = physical_plan(lazy)
     assert "Window" not in plan, plan
@@ -156,7 +188,7 @@ def test_bigram_hash_frame_adds_no_exchange(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_containment_pair_shuffle_runs_at_session_width(spark):
+def test_containment_pair_shuffle_runs_at_session_width(spark, lazy_checkpoints):
     """The containment miner's (lang, h) gram-index exchange is pinned
     at the session shuffle width, whatever the input size. Checked on
     the lazy physical plan, without executing it."""
@@ -166,7 +198,7 @@ def test_containment_pair_shuffle_runs_at_session_width(spark):
     from parquet_to_hyper_app_spark.operators.llm.corpus import containment_frame
 
     sf01 = os.path.join(os.path.dirname(SF_SMOKE), "sf0.1")
-    lazy = containment_frame(spark, sf01, materialize=False)
+    lazy = containment_frame(spark, sf01)
     plan = physical_plan(lazy)
     widths = re.findall(r"hashpartitioning\(lang#\d+, h#\d+L?, (\d+)\)", plan)
     assert widths, plan
@@ -191,7 +223,7 @@ def test_column_pruning_reaches_scan(spark):
     assert set(cols) == {"l_orderkey", "l_quantity", "l_extendedprice", "l_shipdate"}
 
 
-def test_lsh_pipeline_plan_has_no_nested_loop(spark):
+def test_lsh_pipeline_plan_has_no_nested_loop(spark, lazy_checkpoints):
     """The registry dedup queries materialize eagerly (plan truncated
     to an RDD scan), so the plan invariant must be asserted on the
     LAZY form of the LSH pipeline explicitly."""
@@ -199,7 +231,7 @@ def test_lsh_pipeline_plan_has_no_nested_loop(spark):
     from parquet_to_hyper_app_spark.operators.llm.dedup import verified_near_dup_pairs
 
     docs = load_table(spark, SF_SMOKE, "documents")
-    lazy = verified_near_dup_pairs(docs, materialize=False)
+    lazy = verified_near_dup_pairs(docs)
     lazy.foreachPartition(lambda _it: None)
     s = plan_stats(lazy)
     assert s.nested_loop_joins == 0, s

@@ -94,12 +94,27 @@ def test_error_taxonomy(spark, tmp_path):
 
 def test_convert_with_metrics(spark, tmp_path):
     """R10 parity: df.observe counts rows during the write, no 2nd pass."""
-    from parquet_to_hyper_app_spark.sources.convert import convert_with_metrics
+    from parquet_to_hyper_app_spark.sources.convert import convert
 
-    out, metrics = convert_with_metrics(
-        spark, f"{SF_SMOKE}/orders.parquet", str(tmp_path / "sink")
-    )
+    out, metrics = convert(spark, f"{SF_SMOKE}/orders.parquet", str(tmp_path / "sink"))
     assert metrics["rows_processed"] == out.count() == 1500
+
+
+@pytest.mark.parametrize("fmt", ["csv", "json"])
+def test_convert_reads_back_written_schema(spark, tmp_path, fmt):
+    """A text sink comes back with the names, order, types and values
+    it was written with: csv has no header to name its columns and json
+    carries no column order or types."""
+    from parquet_to_hyper_app_spark.catalog import read_parquet
+    from parquet_to_hyper_app_spark.operators.cleaning import clean_numeric, normalize_schema
+    from parquet_to_hyper_app_spark.sources.convert import convert
+
+    src = f"{SF_SMOKE}/orders.parquet"
+    out, metrics = convert(spark, src, str(tmp_path / "sink"), fmt=fmt)
+    written = normalize_schema(clean_numeric(read_parquet(spark, src)))
+    assert out.dtypes == written.dtypes
+    assert out.count() == metrics["rows_processed"] == 1500
+    assert out.exceptAll(written).isEmpty() and written.exceptAll(out).isEmpty()
 
 
 def test_compact_files_count(spark, tmp_path):

@@ -67,7 +67,7 @@ def test_identity_on_non_file_source(spark):
     assert scan_spread(df, "k").count() == 10
 
 
-def test_many_files_is_unconditional_identity(spark, tmp_path):
+def test_many_files_is_unconditional_identity(spark, tmp_path, lazy_checkpoints):
     """>= _MAX_PROBE_FILES files: the estimate must be None (identity),
     NOT len(paths) — the r15 form undercounted wide scans (ignoring
     per-file row groups/splits) and on defaultParallelism > 4x the file
@@ -103,7 +103,7 @@ def test_many_files_is_unconditional_identity(spark, tmp_path):
     step = -(-tbl.num_rows // n_files)
     for i in range(n_files):
         pq.write_table(tbl.slice(i * step, step), str(docs_dir / f"part-{i:05d}.parquet"))
-    plan = physical_plan(containment_frame(spark, str(tmp_path), materialize=False))
+    plan = physical_plan(containment_frame(spark, str(tmp_path)))
     assert "hashpartitioning(doc_id" not in plan, plan
     assert "RoundRobinPartitioning" not in plan, plan
 
