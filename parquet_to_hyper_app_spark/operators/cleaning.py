@@ -41,19 +41,9 @@ def _clean_col(field: T.StructField) -> Column:
     return c
 
 
-def clean_numeric(df: DataFrame, exclude: tuple[str, ...] = ()) -> DataFrame:
-    """NaN/±Inf/null → 0 on float columns; null → 0 on int columns.
-
-    ``exclude`` passes the named columns through untouched — the
-    streaming convert uses it for its int64 event-time column, which is
-    a timestamp in disguise, not a metric (review r5: cleaning coalesced
-    a NULL ts to epoch 1970 in the stream while the batch pipeline,
-    where ts is already a timestamp type, and the oracle both keep
-    NULL).
-    """
-    return df.select(
-        *[F.col(f.name) if f.name in exclude else _clean_col(f) for f in df.schema.fields]
-    )
+def clean_numeric(df: DataFrame) -> DataFrame:
+    """NaN/±Inf/null → 0 on float columns; null → 0 on int columns."""
+    return df.select(*[_clean_col(f) for f in df.schema.fields])
 
 
 def _normalize_col(field: T.StructField) -> Column:
@@ -90,8 +80,8 @@ def parquet_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("parquet_scan_events", oracle="SELECT * FROM events")
 def parquet_scan_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1b: scan of the ns-timestamp source, proving source normalization
-    (int64 nanos → µs-truncated timestamp) matches the oracle's ns→us cast."""
+    """S1b: scan of the timestamp-bearing source, proving the catalog's
+    footer-decided timestamp unit matches the oracle's µs timestamps."""
     return load_table(spark, sf_dir, "events")
 
 

@@ -45,10 +45,6 @@ from parquet_to_hyper_app_spark.session import persisted
 from parquet_to_hyper_app_spark.sources.scanwidth import scan_spread
 from parquet_to_hyper_app_spark.streaming.source import run_to_memory, stream_run, table_stream
 
-#: the documents table as the stream keys read it (a file stream needs
-#: an explicit schema)
-DOCUMENTS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
-
 #: contamination n-gram order: long enough that a shared gram implies a
 #: copied span, short enough to catch partial overlap (WMT/benchmark
 #: decontamination typically uses 8–13; the synthetic corpus's docs are
@@ -1678,7 +1674,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the corpus.
     """
     with stream_run() as run:
-        docs = table_stream(spark, sf_dir, "documents", DOCUMENTS_SCHEMA, run)
+        docs = table_stream(spark, sf_dir, "documents", run)
         agg = (
             gopher_flags(docs)
             .groupBy("source")
@@ -1813,7 +1809,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with stream_run() as run:
         stream = (
-            table_stream(spark, sf_dir, "documents", DOCUMENTS_SCHEMA, run)
+            table_stream(spark, sf_dir, "documents", run)
             .filter((F.col("doc_id") % _INCR_MOD == 0) & F.col("text").isNotNull())
             .select("doc_id", "source", F.sha2(F.col("text"), 256).alias("content_hash"))
         )

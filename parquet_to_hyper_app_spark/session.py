@@ -26,9 +26,10 @@ REQUIRED_SQL_CONFS: dict[str, str] = {
     # Oracle comparability: DuckDB timestamps are UTC-naive. Spark must
     # materialize identical wall-clock values regardless of driver TZ.
     "spark.sql.session.timeZone": "UTC",
-    # The `events` table stores TIMESTAMP(NANOS) which the vectorized
-    # parquet reader rejects; read the raw int64 nanos and convert in
-    # the catalog (see catalog.EVENTS_TS_EXPR).
+    # Spark's parquet reader rejects a TIMESTAMP(NANOS) column (pandas
+    # writes datetime64[ns] so); read it as its raw int64, which the
+    # catalog turns into a µs timestamp for the columns the file's
+    # footer declares NANOS (see catalog.to_micros).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Adaptive execution: runtime partition coalescing + skew handling.
     "spark.sql.adaptive.enabled": "true",

@@ -33,7 +33,7 @@ import zipfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_to_hyper_app_spark.catalog import load_table, read_parquet
+from parquet_to_hyper_app_spark.catalog import read_parquet
 from parquet_to_hyper_app_spark.operators.cleaning import clean_numeric, normalize_schema
 from parquet_to_hyper_app_spark.registry import query
 from parquet_to_hyper_app_spark.session import ensure_session_configs
@@ -260,6 +260,4 @@ def convert_sink_events_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings, timestamps, doubles).
     """
     sink = os.path.join(tempfile.gettempdir(), "parquet_to_hyper_app_spark_sink", "events")
-    df = normalize_schema(clean_numeric(load_table(spark, sf_dir, "events")))
-    df.write.mode("overwrite").parquet(sink)
-    return spark.read.schema(df.schema).parquet(sink)  # explicit schema: no inference job
+    return convert(spark, os.path.join(sf_dir, "events.parquet"), sink)[0]

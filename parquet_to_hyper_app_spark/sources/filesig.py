@@ -1,7 +1,7 @@
 """File-version signatures for driver-side caches keyed by path.
 
 A value derived from files on disk (a parquet footer's row-group count,
-an inferred schema, the detected unit of a timestamp column) stays valid
+an inferred schema and its nanosecond timestamp columns) stays valid
 only while those files are unchanged. Every such cache uses the one
 definition of "same file version" here: the ``(st_ino, st_mtime_ns,
 st_size)`` of each data file. A rewrite in place changes the mtime (and

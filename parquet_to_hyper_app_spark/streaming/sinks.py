@@ -28,11 +28,6 @@ from parquet_to_hyper_app_spark.streaming.source import (
     stream_run,
 )
 
-#: the sink persists the stream's source-normalized int64-µs ts; the
-#: re-read restores the oracle-comparable naive timestamp (no division
-#: — the unit conversion happened once in events_file_stream)
-_SINK_TS_EXPR = "CAST(timestamp_micros(ts) AS TIMESTAMP_NTZ)"
-
 #: what `merge_epoch` writes to every rollup snapshot, and so what every
 #: snapshot is read back with
 _SNAP_SCHEMA = "event_type string, n_events bigint, cents bigint"
@@ -65,17 +60,13 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw = events_file_stream(spark, sf_dir, run)
         out_dir = os.path.join(run, "out")
         # the schema every epoch is written with (each batch has raw's schema)
-        sink_schema = clean_numeric(raw, exclude=("ts",)).schema
+        sink_schema = clean_numeric(raw).schema
 
         def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
             # idempotence comes from keying the write by epoch: a replayed
             # batch OVERWRITES its own epoch directory instead of appending
-            # duplicates (plain append would double rows on retry/restart).
-            # ts is excluded from cleaning: in the stream it is still the
-            # int64 µs column, and int-cleaning would coalesce a NULL event
-            # time to epoch 1970 while the batch convert (timestamp-typed
-            # there) and the oracle keep NULL
-            clean_numeric(batch_df, exclude=("ts",)).write.mode("overwrite").parquet(
+            # duplicates (plain append would double rows on retry/restart)
+            clean_numeric(batch_df).write.mode("overwrite").parquet(
                 os.path.join(out_dir, f"epoch_{epoch_id}")
             )
 
@@ -92,7 +83,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = spark.createDataFrame([], sink_schema)
         else:
             out = spark.read.schema(sink_schema).parquet(*epochs).localCheckpoint(eager=True)
-    return out.withColumn("ts", F.expr(_SINK_TS_EXPR))
+    return out
 
 
 @query(
@@ -233,7 +224,9 @@ def run_dedup_watermark(raw: DataFrame, run: str, events_batch: DataFrame) -> Da
         raw.select(
             "user_id",
             "event_type",
-            F.expr("timestamp_micros(ts)").alias("ts"),
+            # watermarks need the tz-aware type; the session time zone
+            # is UTC, so the instants equal the naive wall clock
+            F.col("ts").cast("timestamp").alias("ts"),
         )
         .withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])

@@ -10,18 +10,11 @@ driver, and `run_to_memory` drops its memory-sink view on exit, also
 on failure — a long-lived driver accumulates neither directories nor
 views, however many runs fail.
 
-This module also owns the raw on-disk schema of events.parquet and the
-NORMALIZATION of its int64 ``ts`` column to microseconds, and nothing
-downstream converts units again. The unit the parquet reader hands
-back for an int64-typed ``ts`` depends on the file's physical
-timestamp annotation and the read path: an inferred batch read under
-``nanosAsLong`` yields raw nanos, while a user-schema ``ts bigint``
-read (the only form ``readStream`` supports) converts TIMESTAMP(MICROS)
-data to micros as-is. A second ``div 1000`` downstream shifts every
-streamed timestamp 1000× into 1970. `events_file_stream` detects the
-on-disk unit once per file version (magnitude probe — epoch-2000+ data
-differs by 10^3 per unit, so the bands are unambiguous) and every
-caller receives int64 MICROS.
+Every stream delivers its columns exactly as the batch table does:
+`table_stream` reads with the schema `catalog.parquet_schema` memoizes
+for the table and applies the same footer-decided timestamp unit
+(`catalog.to_micros`), so a stream's ``ts`` has the batch table's type
+and value and nothing downstream converts units again.
 """
 
 from __future__ import annotations
@@ -32,11 +25,10 @@ import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from parquet_to_hyper_app_spark.catalog import parquet_schema, to_micros
 from parquet_to_hyper_app_spark.session import ensure_session_configs
-from parquet_to_hyper_app_spark.sources.filesig import memo
 
 #: state-store partition count for the LOCAL availableNow harness.
 #: Stateful operators create one state store per shuffle partition per
@@ -102,10 +94,9 @@ def run_available(spark: SparkSession, writer: DataStreamWriter, run: str) -> No
         q.awaitTermination()
 
 
-def table_stream(
-    spark: SparkSession, sf_dir: str, table: str, schema: str, run: str
-) -> DataFrame:
-    """File stream of ``<sf_dir>/<table>.parquet`` read with ``schema``.
+def table_stream(spark: SparkSession, sf_dir: str, table: str, run: str) -> DataFrame:
+    """File stream of ``<sf_dir>/<table>.parquet``, typed as
+    `catalog.read_parquet` types the batch table.
 
     The file stream source requires a directory, so the table is linked
     into ``run/src``: one source per run (a second call on the same run
@@ -117,85 +108,23 @@ def table_stream(
     0 rows.
     """
     ensure_session_configs(spark)
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    schema, nanos = parquet_schema(spark, path)
     src = os.path.join(run, "src")
     os.mkdir(src)
     # absolutize: a relative sf_dir would make the link dangle
-    name = f"{table}.parquet"
-    os.symlink(os.path.abspath(os.path.join(sf_dir, name)), os.path.join(src, name))
-    return (
+    os.symlink(os.path.abspath(path), os.path.join(src, os.path.basename(path)))
+    stream = (
         spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")
         .parquet(src)
     )
-
-
-#: user-supplied stream schema: ts read as raw int64 (unit detected below)
-RAW_EVENTS_SCHEMA = (
-    "event_id bigint, ts bigint, user_id bigint,"
-    " event_type string, value double, props string"
-)
-
-def _ts_micros_scale(
-    spark: SparkSession, src_dir: str, target: str
-) -> tuple[int, int]:
-    """Detect the int64 unit of ``ts`` as read through RAW_EVENTS_SCHEMA
-    from ``src_dir``, whose events file resolves to ``target``.
-
-    Returns ``(div, mul)`` with exactly one ≠ 1 such that
-    ``µs = ts div div * mul``. Detection: a batch aggregate through
-    the SAME user schema the stream uses (identical parquet datasource
-    → identical unit), classified by magnitude of ``max(abs(ts))`` over
-    NON-NULL rows — for any event time between 1971 and ~2200, nanos
-    sit above 3e16, micros above 3e13, millis above 3e10, else seconds.
-    An arbitrary-first-row probe would misclassify a NULL-leading file
-    as seconds and shift every timestamp 10^6×. Batch and stream cannot
-    disagree because both are the V1 parquet source with an explicit
-    user schema. The answer is memoized per version of ``target``
-    (`filesig.memo`; each run's source dir is new and would never
-    hit), so a rewrite or a later batch is probed again.
-    """
-
-    def probe() -> tuple[int, int]:
-        row = (
-            spark.read.schema(RAW_EVENTS_SCHEMA)
-            .parquet(src_dir)
-            .where(F.col("ts").isNotNull())
-            .agg(F.max(F.abs(F.col("ts"))))
-            .first()
-        )
-        ts = row[0] if row is not None else None
-        if ts is None:
-            # empty source / all-NULL ts: there is nothing to convert,
-            # so the identity scale is correct — the stream runs and
-            # produces zero epochs, which the sinks explicitly handle
-            # (raising here would turn a handled empty result into a
-            # query error)
-            return (1, 1)
-        if ts > 3 * 10**16:
-            return (1_000, 1)  # nanoseconds
-        if ts > 3 * 10**13:
-            return (1, 1)  # microseconds
-        if ts > 3 * 10**10:
-            return (1, 1_000)  # milliseconds
-        return (1, 1_000_000)  # seconds
-
-    return memo("ts_scale", target, probe)
+    return to_micros(stream, nanos)
 
 
 def events_file_stream(spark: SparkSession, sf_dir: str, run: str) -> DataFrame:
-    """Events file stream of run ``run`` (see `table_stream`).
-
-    The returned DataFrame has RAW_EVENTS_SCHEMA with ``ts`` already
-    normalized to int64 MICROSECONDS regardless of the on-disk unit —
-    callers build event time with ``timestamp_micros(ts)`` and must
-    NOT apply any further unit conversion.
-    """
-    stream = table_stream(spark, sf_dir, "events", RAW_EVENTS_SCHEMA, run)
-    target = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
-    div, mul = _ts_micros_scale(spark, os.path.join(run, "src"), target)
-    if (div, mul) != (1, 1):
-        stream = stream.withColumn("ts", F.expr(f"ts div {div} * {mul}"))
-    return stream
+    """Events file stream of run ``run`` (see `table_stream`)."""
+    return table_stream(spark, sf_dir, "events", run)
 
 
 def run_to_memory(stream: DataFrame, run: str, output_mode: str) -> DataFrame:

@@ -157,7 +157,7 @@ def stream_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     with stream_run() as run:
         raw = events_file_stream(spark, sf_dir, run)
         stream = (
-            raw.withColumn("ts", F.expr("timestamp_micros(ts)"))
+            raw.withColumn("ts", F.col("ts").cast("timestamp"))
             .groupBy("user_id")
             .applyInPandasWithState(
                 _update_profile,

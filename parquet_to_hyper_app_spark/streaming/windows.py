@@ -164,9 +164,9 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw = events_file_stream(spark, sf_dir, run)
         stream = (
             raw
-            # source-normalized µs → TIMESTAMP (watermarks need the
-            # tz-aware type; session tz is UTC so instants == wall clock)
-            .withColumn("ts", F.expr("timestamp_micros(ts)"))
+            # watermarks need the tz-aware type; the session time zone
+            # is UTC, so the instants equal the naive wall clock
+            .withColumn("ts", F.col("ts").cast("timestamp"))
             .withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"))
@@ -263,7 +263,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     with stream_run() as run:
         raw = events_file_stream(spark, sf_dir, run)
-        ev = raw.withColumn("ts", F.expr("timestamp_micros(ts)"))
+        # tz-aware for the watermarks (session time zone UTC)
+        ev = raw.withColumn("ts", F.col("ts").cast("timestamp"))
         views = (
             ev.filter(F.col("event_type") == "view")
             .select(

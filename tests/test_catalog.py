@@ -38,28 +38,22 @@ def test_rewrite_in_place_is_reinferred(spark, tmp_path):
 
 
 def test_inference_conf_change_is_reinferred(spark, tmp_path):
-    """events.ts stored as TIMESTAMP(NANOS) infers as bigint only under
-    nanosAsLong; a schema cached under one value must not serve a read
-    under the other."""
+    """A TIMESTAMP(NANOS) column infers as bigint only under
+    nanosAsLong and is rejected without it; a schema cached under one
+    value must not serve a read under the other (a stale bigint schema
+    would read through the footer rule as a timestamp, with no error)."""
     path = str(tmp_path / "events.parquet")
     ts = pa.array([1_600_000_000_000_000_123], pa.timestamp("ns"))
     pq.write_table(pa.table({"event_id": [1], "ts": ts}), path, version="2.6")
     conf = "spark.sql.legacy.parquet.nanosAsLong"
     assert dict(load_table(spark, str(tmp_path), "events").dtypes)["ts"] == "timestamp_ntz"
-    assert dict(read_parquet(spark, path).dtypes)["ts"] == "bigint"
     spark.conf.set(conf, "false")
     try:
-        # re-inferred: Spark either types the column as a timestamp or
-        # rejects the NANOS column; a stale cache would answer bigint
-        try:
-            ts_type = dict(read_parquet(spark, path).dtypes)["ts"]
-        except Exception as e:  # noqa: BLE001
-            assert "PARQUET_TYPE_ILLEGAL" in str(e), e
-        else:
-            assert ts_type.startswith("timestamp"), ts_type
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            read_parquet(spark, path)
     finally:
         spark.conf.set(conf, "true")
-    assert dict(read_parquet(spark, path).dtypes)["ts"] == "bigint"
+    assert dict(read_parquet(spark, path).dtypes)["ts"] == "timestamp_ntz"
 
 
 def test_missing_path_raises_as_before(spark, tmp_path):

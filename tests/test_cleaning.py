@@ -151,18 +151,15 @@ def test_grouped_map_single_row_group_yields_null(spark):
     assert rows[2] is not None and rows[3] is not None
 
 
-def test_clean_numeric_exclude_passes_column_through(spark):
-    """Review r5: the streaming convert's int64 event-time column is a
-    timestamp in disguise — `exclude` must keep its NULLs instead of
-    coalescing them to epoch 0, while other columns still clean."""
+def test_clean_numeric_cleans_every_numeric_column(spark):
+    """Every int column, whatever its name, gets null → 0: an event
+    time arrives at cleaning as a timestamp type (the catalog applies
+    the footer's unit at the read), never as an int64 to exempt."""
     from parquet_to_hyper_app_spark.operators.cleaning import clean_numeric
 
     df = spark.createDataFrame(
         [(None, None, float("nan")), (5, 7, 1.5)],
         "ts bigint, user_id bigint, value double",
     )
-    out = {tuple(r) for r in clean_numeric(df, exclude=("ts",)).collect()}
-    assert out == {(None, 0, 0.0), (5, 7, 1.5)}
-    # default path unchanged: everything cleans
     out_all = {tuple(r) for r in clean_numeric(df).collect()}
     assert out_all == {(0, 0, 0.0), (5, 7, 1.5)}

@@ -118,6 +118,18 @@ def test_warm_builds_run_no_jobs(spark):
         assert count_jobs(spark, lambda: fn(spark, SF_SMOKE)) == 0, key
 
 
+def test_warm_event_stream_starts_no_job(spark):
+    """A file stream takes its schema and timestamp unit from the same
+    memo as the batch table: once ``events`` is loaded, setting up its
+    stream reads no data (no unit probe, no inference)."""
+    from parquet_to_hyper_app_spark.catalog import load_table
+    from parquet_to_hyper_app_spark.streaming.source import events_file_stream, stream_run
+
+    load_table(spark, SF_SMOKE, "events")
+    with stream_run() as run:
+        assert count_jobs(spark, lambda: events_file_stream(spark, SF_SMOKE, run)) == 0
+
+
 #: jobs a warm build of each sink key may start at sf0.001: its writes,
 #: the shuffle-map and range-sampling jobs those writes plan, and the
 #: eager detach of a streamed result. Every read of a file the key has
@@ -125,6 +137,7 @@ def test_warm_builds_run_no_jobs(spark):
 #: is a schema-inference job; an inferring read-back would add one.
 SINK_BUILD_JOB_CEILINGS = {
     "convert_sink": 1,
+    "convert_sink_events": 1,
     "sink_compacted": 4,
     "sink_range_clustered": 3,
     "sink_zorder_clustered": 7,

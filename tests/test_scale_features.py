@@ -117,6 +117,40 @@ def test_convert_reads_back_written_schema(spark, tmp_path, fmt):
     assert out.exceptAll(written).isEmpty() and written.exceptAll(out).isEmpty()
 
 
+def test_convert_reads_nanos_timestamps_as_micros(spark, tmp_path):
+    """A pandas-style TIMESTAMP(NANOS) column converts to the timestamp
+    type Spark gives a MICROS column with the same UTC flag, truncated
+    to microseconds, and a NULL timestamp stays NULL (cleaning touches
+    numeric columns only)."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_to_hyper_app_spark.sources.convert import convert
+
+    ns = 1_704_164_645_123_456_789  # 2024-01-02 03:04:05.123456789
+    src = str(tmp_path / "pandas.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "id": [1, 2],
+                "ts": pa.array([ns, None], pa.timestamp("ns")),
+                "ts_utc": pa.array([ns, ns], pa.timestamp("ns", tz="UTC")),
+            }
+        ),
+        src,
+    )
+    out, metrics = convert(spark, src, str(tmp_path / "sink"))
+    assert out.dtypes == [("id", "bigint"), ("ts", "timestamp_ntz"), ("ts_utc", "timestamp")]
+    want = datetime.datetime(2024, 1, 2, 3, 4, 5, 123456)
+    rows = {r.id: r for r in out.collect()}
+    assert metrics["rows_processed"] == 2
+    assert rows[1].ts == want and rows[2].ts is None
+    # the session time zone is UTC, so the instant reads back as this wall clock
+    assert out.select(F.unix_micros("ts_utc")).first()[0] == ns // 1000
+
+
 def test_compact_files_count(spark, tmp_path):
     """compact_files must hit ceil(bytes/target) files, not 1, not 64."""
     import glob

@@ -80,25 +80,12 @@ def test_incremental_agg_is_truly_incremental(spark, tmp_path):
     import os
 
     from parquet_to_hyper_app_spark.streaming.sinks import run_incremental_agg
-    from parquet_to_hyper_app_spark.streaming.source import RAW_EVENTS_SCHEMA, stream_run
+    from parquet_to_hyper_app_spark.streaming.source import stream_run
 
     ev = load_table(spark, SF_SMOKE, "events")
     src = str(tmp_path / "src")
-    # 3 files via repartition; written with a raw int64-µs ts so the
-    # source schema matches events_file_stream's contract
-    ev.select(
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    ).repartition(3).write.parquet(src)
-    stream = (
-        spark.readStream.schema(RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    ev.repartition(3).write.parquet(src)  # 3 files
+    stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(src)
     out_dir = str(tmp_path / "snaps")
     with stream_run() as run:
         got = run_incremental_agg(spark, stream, run, out_dir)
@@ -156,7 +143,7 @@ def test_dedup_watermark_multibatch_stays_oracle_equivalent(spark, tmp_path):
     run_dedup_watermark contract; this harness orders files by event
     time exactly so that case cannot occur)."""
     from parquet_to_hyper_app_spark.streaming.sinks import run_dedup_watermark
-    from parquet_to_hyper_app_spark.streaming.source import RAW_EVENTS_SCHEMA, stream_run
+    from parquet_to_hyper_app_spark.streaming.source import stream_run
 
     ev = load_table(spark, SF_SMOKE, "events")
     src = str(tmp_path / "src")
@@ -168,19 +155,8 @@ def test_dedup_watermark_multibatch_stays_oracle_equivalent(spark, tmp_path):
     # real race: a late-listed file's keys vanished entirely). Keys
     # spanning files still re-emit after their state evicts — the
     # duplication scenario the distinct() guards.
-    ev.select(
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    ).repartitionByRange(4, "ts").sortWithinPartitions("ts").write.parquet(src)
-    raw = (
-        spark.readStream.schema(RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    ev.repartitionByRange(4, "ts").sortWithinPartitions("ts").write.parquet(src)
+    raw = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(src)
     with stream_run() as run:
         got = run_dedup_watermark(raw, run, ev)
     rows = got.collect()
@@ -195,45 +171,66 @@ def test_dedup_watermark_multibatch_stays_oracle_equivalent(spark, tmp_path):
     assert {(r.user_id, r.event_type): r.first_seen for r in rows} == want
 
 
-def test_stream_ts_unit_matches_batch_catalog(spark):
+def _nanos_events_dir(tmp_path) -> str:
+    """A copy of the sf0.001 events table as pandas writes it: ``ts`` is
+    TIMESTAMP(NANOS) with sub-µs digits, and the first row (event_id 0)
+    has a NULL ``ts``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    micros = t.column("ts").cast(pa.int64()).to_pylist()
+    nanos = [None] + [v * 1000 + 789 for v in micros[1:]]
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", pa.array(nanos, pa.timestamp("ns")))
+    pq.write_table(t, str(tmp_path / "events.parquet"))
+    return str(tmp_path)
+
+
+def test_stream_ts_unit_matches_batch_catalog(spark, tmp_path):
     """Pin the round-2 regression: the file-stream source must deliver
-    event timestamps in the SAME unit the batch catalog resolves to —
-    streamed min/max(ts) (µs → timestamp) must equal batch min/max(ts)
-    exactly, whatever physical unit the parquet file stores."""
+    event timestamps with the SAME type and value the batch catalog
+    resolves to, whatever unit the parquet file stores (the driver
+    testdata's MICROS, or the NANOS pandas writes), and a NULL event
+    time must stay NULL through the streaming convert's cleaning."""
+    from parquet_to_hyper_app_spark.streaming.sinks import stream_foreach_batch
     from parquet_to_hyper_app_spark.streaming.source import (
         events_file_stream,
         run_to_memory,
         stream_run,
     )
 
-    with stream_run() as run:
-        raw = events_file_stream(spark, SF_SMOKE, run)
-        stream = raw.select(F.expr("timestamp_micros(ts)").cast("timestamp_ntz").alias("ts"))
-        out = run_to_memory(stream, run, "append")
-    s_min, s_max = out.agg(F.min("ts"), F.max("ts")).first()
-    b_min, b_max = (
-        load_table(spark, SF_SMOKE, "events").agg(F.min("ts"), F.max("ts")).first()
-    )
-    assert (s_min, s_max) == (b_min, b_max), (s_min, s_max, b_min, b_max)
+    for sf in (SF_SMOKE, _nanos_events_dir(tmp_path)):
+        batch = load_table(spark, sf, "events")
+        with stream_run() as run:
+            raw = events_file_stream(spark, sf, run)
+            assert raw.dtypes == batch.dtypes, (sf, raw.dtypes, batch.dtypes)
+            out = run_to_memory(raw.select("ts"), run, "append")
+        agg = (F.min("ts"), F.max("ts"), F.count("ts"))
+        assert out.agg(*agg).first() == batch.agg(*agg).first(), sf
+        converted = stream_foreach_batch(spark, sf)
+        assert converted.dtypes == batch.dtypes, sf
+        assert converted.exceptAll(batch).isEmpty() and batch.exceptAll(converted).isEmpty(), sf
+    # the NANOS copy reads back as the MICROS original: truncated, not
+    # rounded up by its 789 sub-µs nanoseconds, and its NULL kept
+    micros = dict(load_table(spark, SF_SMOKE, "events").select("event_id", "ts").collect())
+    nanos = dict(batch.select("event_id", "ts").collect())
+    assert nanos == {**micros, 0: None}
 
 
-def test_ts_scale_empty_source_is_identity(spark, tmp_path):
-    """An empty (or all-NULL-ts) events source must yield the identity
-    scale — the stream then runs and produces zero epochs, which the
-    sinks handle; raising would turn a handled empty result into a
-    query error. The answer is memoized per version of the source, so
-    a first batch arriving later gets a real magnitude detection."""
-    from parquet_to_hyper_app_spark.streaming.source import (
-        RAW_EVENTS_SCHEMA,
-        _ts_micros_scale,
-    )
+def test_empty_source_stream_returns_no_rows(spark, tmp_path):
+    """An events source with no rows streams zero epochs; the sinks
+    return an empty frame typed like the batch table instead of
+    raising."""
+    import pyarrow.parquet as pq
 
-    src = str(tmp_path / "events_src")
-    spark.createDataFrame([], RAW_EVENTS_SCHEMA).write.parquet(src)
-    assert _ts_micros_scale(spark, src, src) == (1, 1)
-    nanos = [(1, 1_600_000_000_000_000_000, 1, "view", 1.0, "{}")]
-    spark.createDataFrame(nanos, RAW_EVENTS_SCHEMA).write.mode("append").parquet(src)
-    assert _ts_micros_scale(spark, src, src) == (1000, 1)
+    from parquet_to_hyper_app_spark.streaming.sinks import stream_foreach_batch
+
+    empty = pq.read_table(f"{SF_SMOKE}/events.parquet").slice(0, 0)
+    pq.write_table(empty, str(tmp_path / "events.parquet"))
+    out = stream_foreach_batch(spark, str(tmp_path))
+    assert out.count() == 0
+    assert out.dtypes == load_table(spark, str(tmp_path), "events").dtypes
 
 
 def test_dedup_watermark_runs_one_micro_batch(spark):
